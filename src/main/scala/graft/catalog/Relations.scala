@@ -151,9 +151,10 @@ object Relations {
 
   /** Melt DECLARED column GROUPS of every table to (table, group, value)
     * rows — the composite-key analogue of [[melt]], one scan per table.
-    * A group's value is its components cast to string and joined with a
-    * `` separator, so the tuple ("a","b") can never collide with
-    * ("ab") or with a different arity's partial — exactly the
+    * A group's value is its components cast to string and joined with
+    * the ASCII unit separator `"\u001F"`, so the tuple ("a","b") can
+    * never collide with ("ab") or with a different arity's partial (the
+    * tuples (1,234) and (12,34) melt to different values) — exactly the
     * partial-containment false positive that scoring a multi-column FK
     * as independent single columns produces (each component contained,
     * the combination not). Rows where ANY component is null are
@@ -170,7 +171,7 @@ object Relations {
       else Some(
         df.select(explode(array(gs.map { g =>
           struct(lit(g.mkString("+")).as("col"),
-            concat_ws("", g.map(c => col(c).cast("string")): _*).as("v"),
+            concat_ws("\u001F", g.map(c => col(c).cast("string")): _*).as("v"),
             g.map(c => col(c).isNotNull).reduce(_ && _).as("ok"))
         }: _*)).as("cv"))
           .where(col("cv.ok"))
@@ -184,7 +185,14 @@ object Relations {
   /** Score every cross-table candidate column pair; emit pairs with
     * containment ≥ minContainment as
     * (table_a, col_a, table_b, col_b, n_common, containment, verdict).
-    * Directed: containment is asymmetric (A→B ≠ B→A). */
+    * Directed: containment is asymmetric (A→B ≠ B→A).
+    *
+    * At a non-positive minContainment every cross-table pair of
+    * candidates that hold at least one non-null value is emitted, with
+    * n_common = 0 (containment 0, verdict "overlap") where the two share
+    * no value — the same pair set as [[sketchDiscover]]. A candidate
+    * with no non-null value (an empty table, an all-null column)
+    * produces no pair on either path. */
   def discover(tables: Seq[(String, DataFrame)], minContainment: Double = 0.5): DataFrame =
     scoreMelted(meltExact(tables), minContainment)
 
@@ -249,7 +257,11 @@ object Relations {
     * just a longer string key. Declared groups (PK metadata, profiled
     * uniqueness) are the practical input at catalog scale — enumerating
     * all column combinations is exponential and name/type affinity
-    * already prunes the single-column case. */
+    * already prunes the single-column case. The non-positive-threshold
+    * contract is [[discover]]'s, per group: every cross-table pair of
+    * groups with at least one fully non-null tuple is emitted, with
+    * n_common = 0 where they share no tuple; a group with no such tuple
+    * produces no pair here or in [[sketchDiscoverComposite]]. */
   def discoverComposite(tables: Seq[(String, DataFrame)],
       groups: Map[String, Seq[Seq[String]]],
       minContainment: Double = 0.5): DataFrame =
@@ -271,7 +283,7 @@ object Relations {
       else Some(
         df.select(explode(array(gs.map { g =>
           struct(lit(code((t, g.mkString("+")))).as("tc"),
-            concat_ws("", g.map(c => col(c).cast("string")): _*).as("v"),
+            concat_ws("\u001F", g.map(c => col(c).cast("string")): _*).as("v"),
             g.map(c => col(c).isNotNull).reduce(_ && _).as("ok"))
         }: _*)).as("cv"))
           .where(col("cv.ok"))
@@ -323,10 +335,23 @@ object Relations {
       .join(broadcast(decode), col("ta") === col("__tc"))
       .select(col("__tbl").as("tbl"), col("__col").as("col"), col("n").as("nd"))
     val oneWay = counts.where(col("tb") =!= -1)
-    val inter = oneWay
+    val shared = oneWay
       .select(col("ta"), col("tb"), col("n").as("n_common"))
       .unionByName(oneWay.select(col("tb").as("ta"), col("ta").as("tb"),
         col("n").as("n_common")))
+    // at a non-positive threshold a pair sharing NO value qualifies too
+    // (containment 0), but value-derived pair rows never see it: pair
+    // every two cross-table candidates holding a value — the sketch
+    // path's pair set — with n_common defaulting to 0. Catalog-sized
+    // (≤ C² rows), built only below the thresholds callers use.
+    val pairs = if (minContainment > 0) shared else {
+      val codes = counts.where(col("tb") === -1).select(col("ta"))
+      codes.crossJoin(codes.select(col("ta").as("tb")))
+        .where(shiftright(col("ta"), 16) =!= shiftright(col("tb"), 16))
+        .join(shared, Seq("ta", "tb"), "left")
+        .select(col("ta"), col("tb"), coalesce(col("n_common"), lit(0L)).as("n_common"))
+    }
+    val inter = pairs
       .join(broadcast(decode.select(col("__tc"),
         col("__tbl").as("table_a"), col("__col").as("col_a"))),
         col("ta") === col("__tc"))
@@ -427,7 +452,12 @@ object Relations {
         col("table_b").isin(newTables.map(_._1): _*))
   }
 
-  /** KMV containment estimates for every cross-table sketch pair. */
+  /** KMV containment estimates for every cross-table sketch pair with
+    * estimated containment ≥ minContainment. At a non-positive threshold
+    * every cross-table pair of sketches is emitted, with n_common = 0
+    * where the two share no hash — the exact path's pair set
+    * ([[discover]]). A candidate with no non-null value melts no row,
+    * so it has no sketch and produces no pair. */
   private def scoreSketches(sk0: DataFrame, k: Int,
       minContainment: Double): DataFrame = {
     graft.functions.SketchExpressions.register(sk0.sparkSession)

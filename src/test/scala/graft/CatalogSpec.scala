@@ -449,7 +449,7 @@ class CatalogSpec extends AnyFunSuite {
     import spark.implicits._
     // with an empty separator both tuples would concatenate to "1234"
     // and the exact path would count a phantom intersection (and
-    // disagree with the sketch path, which melts with )
+    // disagree with the sketch path, which melts with "\u001F")
     val a = Seq((1L, 234L)).toDF("x", "y")
     val b = Seq((12L, 34L)).toDF("x", "y")
     val groups = Map("a" -> Seq(Seq("x", "y")), "b" -> Seq(Seq("x", "y")))
@@ -463,6 +463,25 @@ class CatalogSpec extends AnyFunSuite {
       .sketchDiscoverComposite(tables, groups, minContainment = 0.0)
       .collect().map(r => (r.getString(0), r.getString(2)) -> r.getLong(4)).toMap
     assert(sketch == exact, s"exact and sketch composite paths disagree:\n$sketch\n$exact")
+  }
+
+  test("relations: zero-threshold discovery emits zero-overlap pairs on both paths") {
+    import spark.implicits._
+    // disjoint id values: every cross-table pair has containment 0, which
+    // meets minContainment = 0.0, so both paths must emit it with
+    // n_common = 0; the all-null column holds no value and pairs with
+    // nothing on either path
+    val a = Seq(1L, 2L, 3L).toDF("id")
+    val b = Seq((10L, Option.empty[Long]), (20L, Option.empty[Long]))
+      .toDF("id", "other_id")
+    val tables = Seq("a" -> a, "b" -> b)
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      (r.getString(0), r.getString(1), r.getString(2), r.getString(3)) -> r.getLong(4)).toMap
+    val exact = pairs(graft.catalog.Relations.discover(tables, minContainment = 0.0))
+    val sketch = pairs(graft.catalog.Relations.sketchDiscover(tables, minContainment = 0.0))
+    assert(exact == Map(("a", "id", "b", "id") -> 0L, ("b", "id", "a", "id") -> 0L),
+      s"exact path must emit both directions of the zero-overlap pair: $exact")
+    assert(sketch == exact, s"exact and sketch single-column paths disagree:\n$sketch\n$exact")
   }
 
   test("relations: composite sketch verdicts agree with the exact composite operator") {
