@@ -480,7 +480,11 @@ object Relations {
     val inBoth = cont.getField("in_both")
     val est = when(inA > 0, inBoth.cast("double") / inA.cast("double")).otherwise(0.0)
 
+    // filter on the unrounded estimate, as the exact path filters on the
+    // unrounded containment: a threshold between a value and its 4-dp
+    // rounding (2/3 vs 0.6667) must drop the pair on both paths
     pairs
+      .where(est >= minContainment)
       .select(col("a.tbl").as("table_a"), col("a.col").as("col_a"),
         col("b.tbl").as("table_b"), col("b.col").as("col_b"),
         inBoth.cast("bigint").as("n_common"),
@@ -489,7 +493,6 @@ object Relations {
           "fk_candidate")
           .when(est >= 0.95, "contained")
           .otherwise("overlap").as("verdict"))
-      .where(col("containment") >= minContainment)
       .orderBy("table_a", "col_a", "table_b", "col_b")
   }
 }

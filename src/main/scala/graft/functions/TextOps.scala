@@ -33,7 +33,7 @@ object TextOps {
     * higher-order-function lambdas (HOFs are CodegenFallback and would
     * drop the hot path out of codegen). */
   def shingleRows(df: DataFrame, idCol: String, textCol: String, w: Int = 3): DataFrame =
-    shingleExpanded(df, idCol, textCol, w)((sh, _) => sh.as("shingle"))
+    shingleExpanded(df, idCol, textCol, w)(_.as("shingle"))
       .distinct()
 
   /** Distinct 64-bit shingle HASHES per document: [[shingleRows]] with
@@ -49,24 +49,24 @@ object TextOps {
     * keep [[shingleRows]]. */
   def shingleHashRows(df: DataFrame, idCol: String, textCol: String,
       w: Int = 3): DataFrame =
-    shingleExpanded(df, idCol, textCol, w)((sh, _) => xxhash64(sh).as("s"))
+    shingleExpanded(df, idCol, textCol, w)(xxhash64(_).as("s"))
       .distinct()
 
   /** The shared (id, shingle) expansion behind [[shingleRows]] and
     * [[shingleHashRows]] — ONE definition of tokenization and shingle
     * construction so the string and hash paths cannot silently diverge
     * (their documented equivalence is "hash applied on top of the same
-    * shingle"). `out(shingle, id)` shapes the emitted column; the
+    * shingle"). `out(shingle)` shapes the emitted column; the
     * caller owns the trailing distinct. */
   private def shingleExpanded(df: DataFrame, idCol: String, textCol: String,
-      w: Int)(out: (Column, Column) => Column): DataFrame = {
+      w: Int)(out: Column => Column): DataFrame = {
     val ws = col("__ws")
     df.select(col(idCol), tokens(col(textCol)).as("__ws"))
       .filter(size(ws) >= w)
       .select(col(idCol), ws, posexplode(sequence(lit(1), size(ws) - (w - 1))))
       .select(col(idCol),
         out(concat_ws(" ",
-          (0 until w).map(k => element_at(ws, col("col") + k)): _*), col(idCol)))
+          (0 until w).map(k => element_at(ws, col("col") + k)): _*)))
   }
 
   /** Distinct w-word shingles (w consecutive tokens joined by space).

@@ -246,8 +246,8 @@ object Graphs {
     * the top-20 part pairs that are NOT (repeatedly) bought together
     * but share the most common repeated-co-purchase neighbors — the
     * classic common-neighbors score, i.e. "bundles that should
-    * exist". Wedge pairs enumerate map-side per center from sorted
-    * neighbor sets (the Baskets.pairs expansion), counts roll up in
+    * exist". Wedge pairs enumerate map-side per center from unordered
+    * neighbor sets (Baskets.pairs canonicalizes by value), counts roll up in
     * one pair-keyed agg, existing edges leave via LEFT ANTI, and the
     * top-20 fuses to TakeOrderedAndProject. The oracle derives wedges
     * independently (adjacency self-join on the center). */

@@ -71,9 +71,9 @@ object ActivityStore {
       .groupBy("d", "user_id").agg(sum("cnt").as("cnt"))
       .filter(col("cnt") =!= 0L)
       .withColumn("ver", lit(batchId))
-    // batch-sized aggregate; empty nets (same-day edits) write nothing
-    if (!net.isEmpty)
-      SnapshotStore.merge(spark, dir, net, Keys, numBuckets)
+    // batch-sized aggregate; empty nets (same-day edits) write nothing:
+    // merge commits no version when no bucket is touched
+    SnapshotStore.merge(spark, dir, net, Keys, numBuckets)
   }
 
   /** Full build from the current event content (backfill path). */

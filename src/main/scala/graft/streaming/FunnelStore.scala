@@ -88,9 +88,9 @@ object FunnelStore {
       .filter(col("cnt") =!= 0L)
       .withColumn("ver", lit(batchId))
     // batch-sized aggregate; an all-untracked or self-cancelling batch
-    // writes nothing (the no-op-version discipline)
-    if (!net.isEmpty)
-      SnapshotStore.merge(spark, dir, net, Keys, numBuckets)
+    // writes nothing (the no-op-version discipline: merge commits no
+    // version when no bucket is touched)
+    SnapshotStore.merge(spark, dir, net, Keys, numBuckets)
   }
 
   /** Full build from the current event content (backfill path). */

@@ -66,8 +66,7 @@ object RfmStore {
       .agg(sum("cnt").as("cnt"), sum("cents").as("cents"))
       .filter(col("cnt") =!= 0L || col("cents") =!= 0L)
       .withColumn("ver", lit(batchId))
-    if (!net.isEmpty)
-      SnapshotStore.merge(spark, dir, net, Keys, numBuckets)
+    SnapshotStore.merge(spark, dir, net, Keys, numBuckets)
   }
 
   /** Full build from the current order content (backfill path). */

@@ -252,13 +252,13 @@ object SnapshotStore {
     * bucket dir vanished between resolution and the scan (a merge's
     * cleanup won the race), retry ONCE against the now-newest manifest.
     *
-    * Healing covers PLAN-TIME resolution only (file listing / schema
-    * inference, which run eagerly here): the returned DataFrame is lazy,
-    * so a bucket dir deleted between this call and a later action still
-    * surfaces as FileNotFoundException at execution time — callers that
-    * hold a snapshot DataFrame across a concurrent merge must either
-    * materialize it promptly (localCheckpoint) or re-call [[read]] on
-    * failure. */
+    * Healing covers PLAN-TIME resolution only (file listing, and schema
+    * inference for pre-evolution dirs, which run eagerly here): the
+    * returned DataFrame is lazy, so a bucket dir deleted between this
+    * call and a later action still surfaces as FileNotFoundException at
+    * execution time — callers that hold a snapshot DataFrame across a
+    * concurrent merge must either materialize it promptly
+    * (localCheckpoint) or re-call [[read]] on failure. */
   private[graft] def readFrom(spark: SparkSession, dir: String,
       resolved: Manifest): DataFrame =
     try readVersion(spark, dir, resolved)
@@ -309,12 +309,15 @@ object SnapshotStore {
       case Some(target) =>
         val (uniform, old) =
           dirs.partition(d => dirWrittenAt(d).exists(_ >= schemaSince))
-        if (old.isEmpty) spark.read.parquet(uniform: _*)
+        // the uniform dirs carry `target` on disk: reading with it skips
+        // the footer-inference job and fixes the column order to the
+        // manifest's (a delete's USING join writes the keys first)
+        def scanUniform = spark.read.schema(target).parquet(uniform: _*)
+        if (old.isEmpty) scanUniform
         else {
           val aligned = old.map(d =>
             graft.ingest.SchemaEvolution.align(spark.read.parquet(d), target))
-          (if (uniform.isEmpty) aligned
-           else spark.read.parquet(uniform: _*) +: aligned)
+          (if (uniform.isEmpty) aligned else scanUniform +: aligned)
             .reduce(_ unionByName _)
         }
     }
@@ -421,17 +424,10 @@ object SnapshotStore {
         batchAligned.withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn")
       }
-    val updates = winners.withColumn("__b", bucketCol(keys, numBuckets))
-      // reused for touched-set + merge; the snapshot swap must not
-      // re-read inputs. Lifecycle note for long-running sinks: the
-      // checkpoint's blocks are released by the ContextCleaner once the
-      // driver drops this batch's references (no public API frees a
-      // localCheckpoint deterministically) — so executor storage holds
-      // O(batches-awaiting-driver-GC) block sets, not one; sinks
-      // processing very large micro-batches on a rarely-collected
-      // driver heap should size executor storage for that
-      .localCheckpoint(true)
-    val touched = updates.select("__b").distinct().collect().map(_.getInt(0)).sorted
+    // reused for touched-set + merge; the snapshot swap must not
+    // re-read inputs
+    val (updates, touched) =
+      checkpointTouched(winners.withColumn("__b", bucketCol(keys, numBuckets)))
     if (touched.isEmpty) return // empty micro-batch: nothing to commit
     val current = committed
     val version = current.map(_.version + 1).getOrElse(1L)
@@ -457,7 +453,30 @@ object SnapshotStore {
         readAligned(spark, existingDirs, Some(target), schemaSince),
         updates.drop("__b"), keys)
     commitVersion(spark, dir, current, version, numBuckets, target,
-      schemaSince, touched.toSeq, merged, keys, retain)
+      schemaSince, touched, merged, keys, retain)
+  }
+
+  /** Checkpoint `bucketed` (rows carrying the `__b` bucket id) and
+    * return it with its distinct bucket ids, sorted — both from ONE
+    * job. The checkpoint is lazy, so the first action over it fills it;
+    * that action is a one-pass `mapPartitions` emitting each
+    * partition's bucket set (at most B ids), with no shuffle. An eager
+    * checkpoint followed by `distinct().collect()` would run the
+    * checkpoint job and then a second pass with its own exchange.
+    *
+    * Lifecycle note for long-running sinks: the checkpoint's blocks are
+    * released by the ContextCleaner once the driver drops this batch's
+    * references (no public API frees a localCheckpoint
+    * deterministically) — so executor storage holds
+    * O(batches-awaiting-driver-GC) block sets, not one; sinks
+    * processing very large micro-batches on a rarely-collected driver
+    * heap should size executor storage for that. */
+  private def checkpointTouched(bucketed: DataFrame): (DataFrame, Seq[Int]) = {
+    val ckpt = bucketed.localCheckpoint(false)
+    val touched = ckpt.select("__b").queryExecution.toRdd
+      .mapPartitions(rows => rows.map(_.getInt(0)).toSet.iterator)
+      .collect().distinct.sorted.toSeq
+    (ckpt, touched)
   }
 
   /** Delete rows by key — the lakehouse DELETE over the bucketed
@@ -528,11 +547,9 @@ object SnapshotStore {
           "upstream (the bucket hash is type-sensitive; a lossy key would " +
           "target the wrong bucket or silently delete a DIFFERENT row)")
     }
-    val doomedKeys = doomedPinned.distinct()
-      .withColumn("__b", bucketCol(keys, numBuckets))
-      .localCheckpoint(true)
-    val touched = doomedKeys.select("__b").distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
+    val (doomedKeys, doomedBuckets) = checkpointTouched(doomedPinned.distinct()
+      .withColumn("__b", bucketCol(keys, numBuckets)))
+    val touched = doomedBuckets
       .filter(committed.buckets.contains) // keys in never-written buckets: no-op
     if (touched.isEmpty) return
     val since = committed.schemaSince.getOrElse(committed.version)

@@ -127,8 +127,7 @@ object TextIndexStore {
       val p = delta.groupBy("word", "doc_id").agg(sum("tf").as("tf"))
         .filter(col("tf") =!= 0L)
         .withColumn("ver", lit(batchId))
-      if (!p.isEmpty) SnapshotStore.merge(spark, postingsDir, p,
-        PostingsKeys, numBuckets)
+      SnapshotStore.merge(spark, postingsDir, p, PostingsKeys, numBuckets)
       // per-doc length delta: dl rides every (doc, word) row of a side,
       // so collapse to one signed value per (doc, side) first — distinct
       // on (doc_id, dl) does it exactly (the two sides of an update
@@ -137,8 +136,7 @@ object TextIndexStore {
         .groupBy("doc_id").agg(sum("dl").as("dl"))
         .filter(col("dl") =!= 0L)
         .withColumn("ver", lit(batchId))
-      if (!dDelta.isEmpty) SnapshotStore.merge(spark, doclenDir, dDelta,
-        DoclenKeys, numBuckets)
+      SnapshotStore.merge(spark, doclenDir, dDelta, DoclenKeys, numBuckets)
     } finally graft.queries.GateMemo.unpersistCheckpoint(delta)
     // positional deltas: per-OCCURRENCE signed counts, same −old/+new
     // additivity as tf (each (doc, word, pos) key is unique per side,
@@ -154,8 +152,7 @@ object TextIndexStore {
         .groupBy("word", "doc_id", "pos").agg(sum("cnt").as("cnt"))
         .filter(col("cnt") =!= 0L)
         .withColumn("ver", lit(batchId))
-      if (!pDelta.isEmpty) SnapshotStore.merge(spark, pd, pDelta,
-        PositionsKeys, numBuckets)
+      SnapshotStore.merge(spark, pd, pDelta, PositionsKeys, numBuckets)
     }
   }
 

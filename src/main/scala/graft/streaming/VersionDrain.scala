@@ -124,21 +124,20 @@ private[graft] object VersionDrain {
         valueCols.tail.map(c => sum(c).as(c)): _*)
       .filter(col(valueCols.head) > 0L)
       .withColumn("ver", lit(baseVer))
-      .localCheckpoint(true)
-    try {
-      SnapshotStore.merge(spark, stage.toString, summed,
-        keys :+ "ver", numBuckets)
-      val out = fs.create(foldedThroughPath(stage.toString), true)
-      try out.write(through.toString.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      if (!fs.rename(base, old))
-        throw new java.io.IOException(s"fold swap failed: $base -> $old")
-      if (!fs.rename(stage, base))
-        throw new java.io.IOException(
-          s"fold swap failed: $stage -> $base (complete store is at $stage)")
-      fs.delete(old, true)
-    } finally graft.queries.GateMemo.unpersistCheckpoint(summed)
+    // merge checkpoints `summed` itself and has written the stage before
+    // it returns, so the live dir it reads is renamed only afterwards
+    SnapshotStore.merge(spark, stage.toString, summed,
+      keys :+ "ver", numBuckets)
+    val out = fs.create(foldedThroughPath(stage.toString), true)
+    try out.write(through.toString.getBytes(
+      java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    if (!fs.rename(base, old))
+      throw new java.io.IOException(s"fold swap failed: $base -> $old")
+    if (!fs.rename(stage, base))
+      throw new java.io.IOException(
+        s"fold swap failed: $stage -> $base (complete store is at $stage)")
+    fs.delete(old, true)
   }
 
   /** Number of version slices in the store's log above its base — the

@@ -484,6 +484,25 @@ class CatalogSpec extends AnyFunSuite {
     assert(sketch == exact, s"exact and sketch single-column paths disagree:\n$sketch\n$exact")
   }
 
+  test("relations: both paths threshold the unrounded containment") {
+    import spark.implicits._
+    // containment of a.id in b.id is 2/3 = 0.6666…, which rounds to
+    // 0.6667: a threshold of 0.66667 lies between the two, so a path
+    // filtering on the rounded value would keep the pair. k exceeds
+    // every candidate's value count, so the sketch estimate is exact
+    val tables = Seq("a" -> Seq(1L, 2L, 3L).toDF("id"),
+      "b" -> Seq(1L, 2L).toDF("id"))
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      (r.getString(0), r.getString(2)) -> r.getDouble(5)).toMap
+    val exact = pairs(graft.catalog.Relations.discover(tables,
+      minContainment = 0.66667))
+    val sketch = pairs(graft.catalog.Relations.sketchDiscover(tables,
+      k = 256, minContainment = 0.66667))
+    assert(exact == Map(("b", "a") -> 1.0),
+      s"exact path must drop the 2/3 pair and keep the contained one: $exact")
+    assert(sketch == exact, s"exact and sketch paths disagree:\n$sketch\n$exact")
+  }
+
   test("relations: composite sketch verdicts agree with the exact composite operator") {
     import spark.implicits._
     val parent = Seq((1L, 10L, "x"), (1L, 20L, "y"), (2L, 10L, "z"))

@@ -65,6 +65,14 @@ class GraphEdgeStoreSpec extends AnyFunSuite {
     assert(streaming.SnapshotStore.currentManifest(spark, dir)
       .map(_.version) == v0)
     assert(edgeSet(dir) == Set((10L, 20L, 1L)))
+    // an insert and a delete of the same order: no version either
+    val order = li((7L, 10L), (7L, 30L))
+    GraphEdgeStore.ingestBatch(spark, dir,
+      order.withColumn("change_type", lit("insert"))
+        .unionByName(order.withColumn("change_type", lit("delete"))), 1L)
+    assert(streaming.SnapshotStore.currentManifest(spark, dir)
+      .map(_.version) == v0)
+    assert(edgeSet(dir) == Set((10L, 20L, 1L)))
   }
 
   test("replaying a batchId is a no-op (log-structured version key)") {
@@ -164,6 +172,20 @@ class GraphEdgeStoreSpec extends AnyFunSuite {
     GraphEdgeStore.ingestCountsBatch(spark, cDir,
       li((1L, 10L), (1L, 20L)).withColumn("change_type", lit("delete")), 1L)
     assert(counts() == Set((20L, 1L), (30L, 1L)))
+  }
+
+  test("count store: a batch whose per-part counts net to zero commits no version") {
+    val cDir = freshDir() + "/counts"
+    GraphEdgeStore.buildCounts(spark, cDir, li((1L, 10L), (2L, 20L)))
+    val v0 = streaming.SnapshotStore.currentManifest(spark, cDir).map(_.version)
+    // an insert and a delete of the same order: every part nets 0
+    GraphEdgeStore.ingestCountsBatch(spark, cDir,
+      li((3L, 10L), (3L, 20L)).withColumn("change_type", lit("insert"))
+        .unionByName(
+          li((3L, 10L), (3L, 20L)).withColumn("change_type", lit("delete"))),
+      0L)
+    assert(streaming.SnapshotStore.currentManifest(spark, cDir)
+      .map(_.version) == v0)
   }
 
   test("jaccard served from the stores equals the live derivation") {

@@ -64,6 +64,20 @@ class RfmStoreSpec extends AnyFunSuite {
     assert(stats(dir) == before)
   }
 
+  test("an update that moves no cell commits no version") {
+    val dir = freshDir()
+    RfmStore.ingestBatch(spark, dir, change(
+      (1L, "insert", null, 7L, null, day("2024-03-01"), null, 10.0)), 0L)
+    val v0 = SnapshotStore.currentManifest(spark, dir).map(_.version)
+    // same customer, day and price on both images: the net delta is
+    // empty, and merge commits nothing for it
+    RfmStore.ingestBatch(spark, dir, change(
+      (1L, "update", 7L, 7L, day("2024-03-01"), day("2024-03-01"),
+        10.0, 10.0)), 1L)
+    assert(SnapshotStore.currentManifest(spark, dir).map(_.version) == v0)
+    assert(stats(dir) == Map(7L -> (1L, 1000L, "2024-03-01")))
+  }
+
   test("a customer-moving update nets across customers") {
     val dir = freshDir()
     RfmStore.ingestBatch(spark, dir, change(

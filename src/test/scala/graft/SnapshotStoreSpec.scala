@@ -348,6 +348,60 @@ class SnapshotStoreSpec extends AnyFunSuite {
     }
   }
 
+  test("read returns the manifest's column order after a delete, key not leading") {
+    import spark.implicits._
+    val dir = freshDir("snap_delete_order").getAbsolutePath
+    SnapshotStore.merge(spark, dir,
+      (1L to 40L).map(k => (s"v$k", k, k * 10)).toDF("v", "k", "n"),
+      Seq("k"), numBuckets = 4)
+    // the delete's left-anti USING join writes the key column first;
+    // read must still follow the manifest's #schema= order
+    SnapshotStore.delete(spark, dir, Seq(5L, 9L, 13L).toDF("k"), Seq("k"))
+    val manifestOrder = SnapshotStore.currentManifest(spark, dir).get
+      .schema.get.fieldNames.toSeq
+    assert(manifestOrder == Seq("v", "k", "n"))
+    val snap = SnapshotStore.read(spark, dir)
+    assert(snap.columns.toSeq == manifestOrder)
+    assert(snap.count() == 37)
+    assert(snap.filter($"k" === 7L).head == org.apache.spark.sql.Row("v7", 7L, 70L))
+    // the bucket-pruned read follows the same order
+    val pruned = SnapshotStore.readBuckets(spark, dir, 0 until 4).get
+    assert(pruned.columns.toSeq == manifestOrder)
+  }
+
+  test("a one-key merge into a 4-bucket snapshot runs 4 Spark jobs") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = freshDir("snap_merge_jobs").getAbsolutePath
+    SnapshotStore.merge(spark, dir,
+      (1L to 40L).map(k => (k, s"v$k")).toDF("k", "v"), Seq("k"), numBuckets = 4)
+    val batch = Seq((7L, "w7")).toDF("k", "v")
+    // count only the jobs this thread starts, tagged by a local property
+    val tag = "graft.test.merge_jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(tag) != null))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, "1")
+    try SnapshotStore.merge(spark, dir, batch, Seq("k"), numBuckets = 4)
+    finally {
+      sc.setLocalProperty(tag, null)
+      org.apache.spark.graft.ListenerBusHook.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    // the same merge ran 7 jobs before the touched buckets were found in
+    // the job that fills the checkpoint and the bucket read took the
+    // manifest's schema: an eager checkpoint job, a distinct-bucket pass
+    // with its own exchange (two jobs) and a footer-inference job, where
+    // one checkpoint-filling collect now stands
+    assert(jobs.get == 4, s"merge ran ${jobs.get} jobs")
+    assert(SnapshotStore.read(spark, dir).filter($"k" === 7L).head.getString(1) == "w7")
+  }
+
   test("update: predicate rewrite is bucket-pruned, replay-idempotent, CDC-classified") {
     import spark.implicits._
     val dir = freshDir("snap_update").getAbsolutePath

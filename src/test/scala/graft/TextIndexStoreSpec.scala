@@ -87,6 +87,25 @@ class TextIndexStoreSpec extends AnyFunSuite {
     assert(postingSet(p) == once && lenMap(l) == Map(1L -> 2L))
   }
 
+  test("an update that keeps the text commits no version on any artifact") {
+    val b = freshDir(); val p = s"$b/post"; val l = s"$b/len"
+    val o = s"$b/pos"
+    TextIndexStore.build(spark, p, l, docs((1L, "a b a")),
+      positionsDir = Some(o))
+    def versions() = Seq(p, l, o).map(d =>
+      streaming.SnapshotStore.currentManifest(spark, d).map(_.version))
+    val v0 = versions()
+    // −old +new over the same text: postings, lengths and positions all
+    // net to empty deltas, and merge commits nothing for them
+    TextIndexStore.ingestBatch(spark, p, l,
+      docs((1L, "ignored")).select(col("doc_id"),
+        lit("update").as("change_type"),
+        lit("a b a").as("old_text"), lit("a b a").as("new_text")), 0L,
+      positionsDir = Some(o))
+    assert(versions() == v0)
+    assert(postingSet(p) == Set(("a", 1L, 2L), ("b", 1L, 1L)))
+  }
+
   test("fold compacts both artifact logs; views and replay floor survive") {
     import spark.implicits._
     val b = freshDir()
