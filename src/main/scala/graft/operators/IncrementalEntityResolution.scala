@@ -51,7 +51,7 @@ import graft.streaming.SnapshotStore
   *     segment blocking, so compute stays linear even when the prune
   *     reads most of the index; the residual I/O is vocabulary-sized,
   *     which at any corpus scale is dwarfed by the corpus itself.
-  *     MEASURED (Round16Probe, SCALING.md "ER name-index I/O"): at a
+  *     MEASURED (SCALING.md "ER name-index I/O"): at a
   *     fully degenerate single-length vocabulary, batch cost is FLAT
   *     at 4× history — index I/O does not dominate, so the
   *     (seg_id, segment-hash)-bucketed layout once floated as the next
@@ -198,7 +198,7 @@ object IncrementalEntityResolution {
     * write batch-bounded labels + merge-bounded forwarding rows.
     *
     * `autoFoldDepth` is the self-triggering maintenance policy the
-    * other maintained artifacts carry (`VersionDrain.foldIfDeep`): when
+    * other maintained artifacts carry (`SignedCells.drain`): when
     * a batch's merges push the longest forwarding chain PAST the
     * budget, the ingest folds its own store before returning — read
     * amplification stays bounded at ~budget broadcast probes per

@@ -24,10 +24,9 @@ import org.apache.spark.sql.functions._
   *
   * Same log-structured (key, ver) exactly-once design as the other
   * maintained artifacts: per-version deltas are deterministic in the
-  * batch frame, the shared [[VersionDrain]] protocol supplies the
-  * watermark/replay floor, and [[fold]] is the standard
-  * single-measure log-fold (cnt as the liveness gauge — a pair
-  * netting 0 drops).
+  * batch frame, and the shared [[SignedCells]] mechanism supplies the
+  * netting, the watermark/replay floor and the standard log-fold (cnt
+  * as the liveness gauge — a pair netting 0 drops).
   *
   * Serving ([[activity]]): one artifact-sized net-sum → the distinct
   * (d, user_id) frame `q_active_users` derives from the log —
@@ -41,10 +40,10 @@ import org.apache.spark.sql.functions._
   */
 object ActivityStore {
 
-  /** The full-build base version; CDC versions are ≥ 0. */
-  val BaseVer: Long = -1L
+  /** The full-build base version ([[SignedCells.BaseVer]]). */
+  val BaseVer: Long = SignedCells.BaseVer
 
-  private val Keys = Seq("d", "user_id", "ver")
+  private val Cells = SignedCells(Seq("d", "user_id"), Seq("cnt"))
 
   private def pairs(side: DataFrame, tsCol: String, userCol: String,
       sign: Int): DataFrame =
@@ -55,69 +54,50 @@ object ActivityStore {
 
   /** One CDC batch of event changes as signed (day, user) count deltas
     * under version `batchId`. The events table's snapshot key is the
-    * event id; ts/user ride as payload images. Idempotent per batchId. */
+    * event id; ts/user ride as payload images. Idempotent per batchId;
+    * empty nets (same-day edits) write nothing. */
   def ingestBatch(spark: SparkSession, dir: String, changes: DataFrame,
       batchId: Long, tsCol: String = "ts", userCol: String = "user_id",
       numBuckets: Int = 8): Unit = {
-    require(batchId >= 0L,
-      s"batchId must be >= 0 (got $batchId): $BaseVer is reserved for the base build")
     val plus = pairs(
       changes.filter(col("change_type").isin("insert", "update")),
       s"new_$tsCol", s"new_$userCol", 1)
     val minus = pairs(
       changes.filter(col("change_type").isin("delete", "update")),
       s"old_$tsCol", s"old_$userCol", -1)
-    val net = plus.unionByName(minus)
-      .groupBy("d", "user_id").agg(sum("cnt").as("cnt"))
-      .filter(col("cnt") =!= 0L)
-      .withColumn("ver", lit(batchId))
-    // batch-sized aggregate; empty nets (same-day edits) write nothing:
-    // merge commits no version when no bucket is touched
-    SnapshotStore.merge(spark, dir, net, Keys, numBuckets)
+    Cells.ingest(spark, dir, plus.unionByName(minus), batchId, numBuckets)
   }
 
   /** Full build from the current event content (backfill path). */
   def build(spark: SparkSession, dir: String, events: DataFrame,
       tsCol: String = "ts", userCol: String = "user_id",
-      numBuckets: Int = 8): Unit = {
-    val base = events.groupBy(
-      to_date(date_trunc("day", col(tsCol))).as("d"),
-      col(userCol).as("user_id"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("ver", lit(BaseVer))
-    SnapshotStore.merge(spark, dir, base, Keys, numBuckets)
-  }
+      numBuckets: Int = 8): Unit =
+    Cells.build(spark, dir,
+      events.groupBy(
+        to_date(date_trunc("day", col(tsCol))).as("d"),
+        col(userCol).as("user_id"))
+        .agg(count(lit(1)).as("cnt")),
+      numBuckets)
 
-  /** Drain the events CDC feed into the artifact (shared
-    * [[VersionDrain]] protocol) with the standard depth-triggered
-    * self-fold. */
+  /** Drain the events CDC feed into the artifact ([[SignedCells.drain]])
+    * with the standard depth-triggered self-fold. */
   def maintainFromCdc(spark: SparkSession, cdcDir: String, dir: String,
       checkpointDir: String, tsCol: String = "ts",
       userCol: String = "user_id", numBuckets: Int = 8,
-      autoFoldDepth: Option[Int] = None): Unit = {
-    VersionDrain.recoverFold(spark, dir)
-    val floors = VersionDrain.readFoldedThrough(spark, dir).toSeq
-    VersionDrain.drain(spark, cdcDir, checkpointDir, floors) { (batch, v) =>
+      autoFoldDepth: Option[Int] = None): Unit =
+    SignedCells.drain(spark, cdcDir, checkpointDir, Seq(Cells -> dir),
+        autoFoldDepth) { (batch, v) =>
       ingestBatch(spark, dir, batch, v, tsCol, userCol, numBuckets)
     }
-    autoFoldDepth.foreach { depth =>
-      if (VersionDrain.logDepth(spark, dir, BaseVer) > depth)
-        fold(spark, dir)
-    }
-  }
 
   /** Log-fold compaction (cnt is the liveness gauge). */
-  def fold(spark: SparkSession, dir: String): Unit =
-    VersionDrain.foldStore(spark, dir, Seq("d", "user_id"), "cnt", BaseVer)
+  def fold(spark: SparkSession, dir: String): Unit = Cells.fold(spark, dir)
 
   /** The served DISTINCT (d, user_id) activity frame: pairs whose net
     * event count is positive — exactly the frame the live key derives
     * from the event log. Artifact-sized. */
   def activity(spark: SparkSession, dir: String): DataFrame =
-    SnapshotStore.read(spark, dir)
-      .groupBy("d", "user_id").agg(sum("cnt").as("__n"))
-      .filter(col("__n") > 0L)
-      .select("d", "user_id")
+    Cells.live(spark, dir).select("d", "user_id")
 
   /** Store-served DAU / rolling-7-day WAU / stickiness — the
     * registered `q_active_users` output computed through the shared

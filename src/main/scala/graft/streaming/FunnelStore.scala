@@ -41,8 +41,8 @@ import org.apache.spark.sql.functions._
   * "Funnel store & the sequence notch").
   *
   * Same log-structured (key, ver) exactly-once design as the other
-  * maintained artifacts: shared [[VersionDrain]] watermark/replay
-  * floor, [[fold]] with cnt as the liveness gauge.
+  * maintained artifacts: shared [[SignedCells]] netting,
+  * watermark/replay floor, [[fold]] with cnt as the liveness gauge.
   *
   * Serving: one artifact-sized net-sum → the distinct live cell frame
   * ([[stepEvents]]), then the SAME [[graft.operators.Funnel]]
@@ -51,10 +51,7 @@ import org.apache.spark.sql.functions._
   */
 object FunnelStore {
 
-  /** The full-build base version; CDC versions are ≥ 0. */
-  val BaseVer: Long = -1L
-
-  private val Keys = Seq("user_id", "event_type", "ts", "ver")
+  private val Cells = SignedCells(Seq("user_id", "event_type", "ts"), Seq("cnt"))
 
   private def cells(side: DataFrame, steps: Seq[String], prefix: String,
       tsCol: String, userCol: String, typeCol: String,
@@ -70,76 +67,55 @@ object FunnelStore {
     * `batchId`, filtered to the tracked `steps` types on each side's
     * OWN image (so a type correction into/out of the tracked set
     * contributes on exactly the side where it is tracked). Idempotent
-    * per batchId. */
+    * per batchId; an all-untracked or self-cancelling batch writes
+    * nothing. */
   def ingestBatch(spark: SparkSession, dir: String, changes: DataFrame,
       batchId: Long, steps: Seq[String], tsCol: String = "ts",
       userCol: String = "user_id", typeCol: String = "event_type",
       numBuckets: Int = 8): Unit = {
-    require(batchId >= 0L,
-      s"batchId must be >= 0 (got $batchId): $BaseVer is reserved for the base build")
     val plus = cells(
       changes.filter(col("change_type").isin("insert", "update")),
       steps, "new", tsCol, userCol, typeCol, 1)
     val minus = cells(
       changes.filter(col("change_type").isin("delete", "update")),
       steps, "old", tsCol, userCol, typeCol, -1)
-    val net = plus.unionByName(minus)
-      .groupBy("user_id", "event_type", "ts").agg(sum("cnt").as("cnt"))
-      .filter(col("cnt") =!= 0L)
-      .withColumn("ver", lit(batchId))
-    // batch-sized aggregate; an all-untracked or self-cancelling batch
-    // writes nothing (the no-op-version discipline: merge commits no
-    // version when no bucket is touched)
-    SnapshotStore.merge(spark, dir, net, Keys, numBuckets)
+    Cells.ingest(spark, dir, plus.unionByName(minus), batchId, numBuckets)
   }
 
   /** Full build from the current event content (backfill path). */
   def build(spark: SparkSession, dir: String, events: DataFrame,
       steps: Seq[String], tsCol: String = "ts",
       userCol: String = "user_id", typeCol: String = "event_type",
-      numBuckets: Int = 8): Unit = {
-    val base = events.filter(col(typeCol).isin(steps: _*))
-      .groupBy(col(userCol).as("user_id"), col(typeCol).as("event_type"),
-        col(tsCol).as("ts"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("ver", lit(BaseVer))
-    SnapshotStore.merge(spark, dir, base, Keys, numBuckets)
-  }
+      numBuckets: Int = 8): Unit =
+    Cells.build(spark, dir,
+      events.filter(col(typeCol).isin(steps: _*))
+        .groupBy(col(userCol).as("user_id"), col(typeCol).as("event_type"),
+          col(tsCol).as("ts"))
+        .agg(count(lit(1)).as("cnt")),
+      numBuckets)
 
-  /** Drain the events CDC feed into the artifact (shared
-    * [[VersionDrain]] protocol) with the standard depth-triggered
-    * self-fold. */
+  /** Drain the events CDC feed into the artifact ([[SignedCells.drain]])
+    * with the standard depth-triggered self-fold. */
   def maintainFromCdc(spark: SparkSession, cdcDir: String, dir: String,
       checkpointDir: String, steps: Seq[String], tsCol: String = "ts",
       userCol: String = "user_id", typeCol: String = "event_type",
-      numBuckets: Int = 8, autoFoldDepth: Option[Int] = None): Unit = {
-    VersionDrain.recoverFold(spark, dir)
-    val floors = VersionDrain.readFoldedThrough(spark, dir).toSeq
-    VersionDrain.drain(spark, cdcDir, checkpointDir, floors) { (batch, v) =>
+      numBuckets: Int = 8, autoFoldDepth: Option[Int] = None): Unit =
+    SignedCells.drain(spark, cdcDir, checkpointDir, Seq(Cells -> dir),
+        autoFoldDepth) { (batch, v) =>
       ingestBatch(spark, dir, batch, v, steps, tsCol, userCol, typeCol,
         numBuckets)
     }
-    autoFoldDepth.foreach { depth =>
-      if (VersionDrain.logDepth(spark, dir, BaseVer) > depth)
-        fold(spark, dir)
-    }
-  }
 
   /** Log-fold compaction (cnt is the liveness gauge — a cell whose
     * events were all retracted drops). */
-  def fold(spark: SparkSession, dir: String): Unit =
-    VersionDrain.foldStore(spark, dir, Seq("user_id", "event_type", "ts"),
-      "cnt", BaseVer)
+  def fold(spark: SparkSession, dir: String): Unit = Cells.fold(spark, dir)
 
   /** The served distinct live cell frame (user_id, event_type, ts) —
     * every step-typed cell with a positive net count after the
     * version-log sum: exactly the multiset-support the funnel
     * derivations consume. Artifact-sized. */
   def stepEvents(spark: SparkSession, dir: String): DataFrame =
-    SnapshotStore.read(spark, dir)
-      .groupBy("user_id", "event_type", "ts").agg(sum("cnt").as("__n"))
-      .filter(col("__n") > 0L)
-      .select("user_id", "event_type", "ts")
+    Cells.live(spark, dir).select("user_id", "event_type", "ts")
 
   /** Store-served ordered funnel — the registered `q_funnel` output via
     * the same [[graft.operators.Funnel.run]] derivation (hash-identical

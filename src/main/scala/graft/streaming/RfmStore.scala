@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   *     the sketch store's rebuild discipline).
   *
   * Same log-structured (key, ver) exactly-once design as the other
-  * maintained artifacts (shared [[VersionDrain]] watermark, replay
-  * floor, multi-measure fold with cnt as the liveness gauge).
+  * maintained artifacts (shared [[SignedCells]] netting, watermark,
+  * replay floor, multi-measure fold with cnt as the liveness gauge).
   *
   * Serving ([[rfm]]): one artifact-sized net-sum to the per-customer
   * frame, then the SHARED [[graft.queries.Commerce.rfmFrom]] scoring
@@ -36,10 +36,7 @@ import org.apache.spark.sql.functions._
   */
 object RfmStore {
 
-  /** The full-build base version; CDC versions are ≥ 0. */
-  val BaseVer: Long = -1L
-
-  private val Keys = Seq("o_custkey", "d", "ver")
+  private val Cells = SignedCells(Seq("o_custkey", "d"), Seq("cnt", "cents"))
 
   private def cells(side: DataFrame, prefix: String, sign: Int): DataFrame =
     side.groupBy(
@@ -55,64 +52,43 @@ object RfmStore {
     * per batchId. */
   def ingestBatch(spark: SparkSession, dir: String, changes: DataFrame,
       batchId: Long, numBuckets: Int = 8): Unit = {
-    require(batchId >= 0L,
-      s"batchId must be >= 0 (got $batchId): $BaseVer is reserved for the base build")
     val plus = cells(
       changes.filter(col("change_type").isin("insert", "update")), "new", 1)
     val minus = cells(
       changes.filter(col("change_type").isin("delete", "update")), "old", -1)
-    val net = plus.unionByName(minus)
-      .groupBy("o_custkey", "d")
-      .agg(sum("cnt").as("cnt"), sum("cents").as("cents"))
-      .filter(col("cnt") =!= 0L || col("cents") =!= 0L)
-      .withColumn("ver", lit(batchId))
-    SnapshotStore.merge(spark, dir, net, Keys, numBuckets)
+    Cells.ingest(spark, dir, plus.unionByName(minus), batchId, numBuckets)
   }
 
   /** Full build from the current order content (backfill path). */
   def build(spark: SparkSession, dir: String, orders: DataFrame,
-      numBuckets: Int = 8): Unit = {
-    val base = orders.groupBy(
-      col("o_custkey"), col("o_orderdate").as("d"))
-      .agg(count(lit(1)).as("cnt"),
-        sum(round(col("o_totalprice") * 100, 0).cast("bigint")).as("cents"))
-      .withColumn("ver", lit(BaseVer))
-    SnapshotStore.merge(spark, dir, base, Keys, numBuckets)
-  }
+      numBuckets: Int = 8): Unit =
+    Cells.build(spark, dir,
+      orders.groupBy(col("o_custkey"), col("o_orderdate").as("d"))
+        .agg(count(lit(1)).as("cnt"),
+          sum(round(col("o_totalprice") * 100, 0).cast("bigint")).as("cents")),
+      numBuckets)
 
-  /** Drain the orders CDC feed into the artifact (shared
-    * [[VersionDrain]] protocol) with the standard depth-triggered
-    * self-fold. */
+  /** Drain the orders CDC feed into the artifact ([[SignedCells.drain]])
+    * with the standard depth-triggered self-fold. */
   def maintainFromCdc(spark: SparkSession, cdcDir: String, dir: String,
       checkpointDir: String, numBuckets: Int = 8,
-      autoFoldDepth: Option[Int] = None): Unit = {
-    VersionDrain.recoverFold(spark, dir)
-    val floors = VersionDrain.readFoldedThrough(spark, dir).toSeq
-    VersionDrain.drain(spark, cdcDir, checkpointDir, floors) { (batch, v) =>
+      autoFoldDepth: Option[Int] = None): Unit =
+    SignedCells.drain(spark, cdcDir, checkpointDir, Seq(Cells -> dir),
+        autoFoldDepth) { (batch, v) =>
       ingestBatch(spark, dir, batch, v, numBuckets)
     }
-    autoFoldDepth.foreach { depth =>
-      if (VersionDrain.logDepth(spark, dir, BaseVer) > depth)
-        fold(spark, dir)
-    }
-  }
 
   /** Log-fold compaction (cnt is the liveness gauge; a (customer, day)
     * cell whose orders all cancelled drops). */
-  def fold(spark: SparkSession, dir: String): Unit =
-    VersionDrain.foldStoreMulti(spark, dir, Seq("o_custkey", "d"),
-      Seq("cnt", "cents"), BaseVer)
+  def fold(spark: SparkSession, dir: String): Unit = Cells.fold(spark, dir)
 
   /** The served per-customer frame (o_custkey, freq, cents, last_o) —
     * exactly what the live key derives from the order log, from
     * customers×active-days artifact rows instead. */
   def customerStats(spark: SparkSession, dir: String): DataFrame =
-    SnapshotStore.read(spark, dir)
-      .groupBy("o_custkey", "d")
-      .agg(sum("cnt").as("__cnt"), sum("cents").as("__cents"))
-      .filter(col("__cnt") > 0L)
+    Cells.live(spark, dir)
       .groupBy("o_custkey")
-      .agg(sum("__cnt").as("freq"), sum("__cents").as("cents"),
+      .agg(sum("cnt").as("freq"), sum("cents").as("cents"),
         max("d").as("last_o"))
 
   /** Store-served RFM segmentation — the registered `q_rfm` output via
@@ -126,11 +102,7 @@ object RfmStore {
     * version-log sum, carrying that day's exact net cents. The shared
     * input shape of the day-2 serving paths below. */
   def activityCells(spark: SparkSession, dir: String): DataFrame =
-    SnapshotStore.read(spark, dir)
-      .groupBy("o_custkey", "d")
-      .agg(sum("cnt").as("__cnt"), sum("cents").as("cents"))
-      .filter(col("__cnt") > 0L)
-      .select(col("o_custkey"), col("d"), col("cents"))
+    Cells.live(spark, dir).select("o_custkey", "d", "cents")
 
   /** Store-served cohort LTV (round 18 — the round-17 verdict's
     * commerce ask): the registered `q_cohort_ltv` output via the shared

@@ -71,8 +71,8 @@ import org.apache.spark.sql.functions._
   */
 object SketchCatalogStore {
 
-  /** The full-build base version; CDC versions are ≥ 0. */
-  val BaseVer: Long = -1L
+  /** The full-build base version ([[SignedCells.BaseVer]]). */
+  val BaseVer: Long = SignedCells.BaseVer
 
   private val Keys = Seq("tbl", "col", "ver")
 
@@ -97,8 +97,7 @@ object SketchCatalogStore {
   def ingestBatch(spark: SparkSession, dir: String, tbl: String,
       changes: DataFrame, batchId: Long, keyCols: Seq[String],
       current: => DataFrame, k: Int = 256, numBuckets: Int = 4): Unit = {
-    require(batchId >= 0L,
-      s"batchId must be >= 0 (got $batchId): $BaseVer is reserved for base builds")
+    SignedCells.requireCdcVersion(batchId)
     val cur = current
     val tracked = Relations.idLikeColumns(cur)
     if (tracked.isEmpty) return

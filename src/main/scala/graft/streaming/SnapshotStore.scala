@@ -803,17 +803,9 @@ object SnapshotStore {
       if (!fs.rename(new Path(stage, s"__b=$b"), to))
         throw new java.io.IOException(s"failed to stage bucket $b at $to")
     }
-    val bucketMap = current.map(_.buckets).getOrElse(Map.empty) --
-      emptied ++ staged.map(b => b -> s"b${b}_v$version")
-    val tmpManifest = new Path(base, s"$ManifestPrefix${version}__tmp")
-    val out = fs.create(tmpManifest, true)
-    try out.write((Seq(s"#numBuckets=$numBuckets", s"#schema=${target.json}",
-      s"#schemaSince=$schemaSince") ++
-      bucketMap.toSeq.sortBy(_._1)
-        .map { case (b, d) => s"$b\t$d" }).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!fs.rename(tmpManifest, new Path(base, s"$ManifestPrefix$version")))
-      throw new java.io.IOException(s"manifest commit failed for version $version")
+    writeManifest(fs, base, version, numBuckets, target, schemaSince,
+      current.map(_.buckets).getOrElse(Map.empty) --
+        emptied ++ staged.map(b => b -> s"b${b}_v$version"))
     // post-commit cleanup (best-effort): staging scaffold always;
     // replaced bucket dirs + superseded manifests only when not
     // retaining history for time-travel reads
@@ -823,5 +815,31 @@ object SnapshotStore {
       fs.delete(new Path(base, s"$ManifestPrefix${m.version}"), false)
     }
     ()
+  }
+
+  /** Make `version` visible: write its manifest under a temp name, then
+    * ONE rename — the pointer every reader resolves. */
+  private def writeManifest(fs: FileSystem, base: Path, version: Long,
+      numBuckets: Int, target: org.apache.spark.sql.types.StructType,
+      schemaSince: Long, bucketMap: Map[Int, String]): Unit = {
+    val tmpManifest = new Path(base, s"$ManifestPrefix${version}__tmp")
+    val out = fs.create(tmpManifest, true)
+    try out.write((Seq(s"#numBuckets=$numBuckets", s"#schema=${target.json}",
+      s"#schemaSince=$schemaSince") ++
+      bucketMap.toSeq.sortBy(_._1)
+        .map { case (b, d) => s"$b\t$d" }).mkString("\n").getBytes("UTF-8"))
+    finally out.close()
+    if (!fs.rename(tmpManifest, new Path(base, s"$ManifestPrefix$version")))
+      throw new java.io.IOException(s"manifest commit failed for version $version")
+  }
+
+  /** Commit version 1 of a fresh store that holds no rows: a manifest
+    * with no buckets under `schema`, which [[read]] serves as an empty
+    * frame (a fold's new base when every key netted out). */
+  private[graft] def commitEmpty(spark: SparkSession, dir: String,
+      numBuckets: Int, schema: org.apache.spark.sql.types.StructType): Unit = {
+    val (fs, base) = fsOf(spark, dir)
+    fs.mkdirs(base)
+    writeManifest(fs, base, 1L, numBuckets, schema, 1L, Map.empty)
   }
 }

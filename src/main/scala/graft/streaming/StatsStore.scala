@@ -45,8 +45,8 @@ import org.apache.spark.sql.types._
   * Same log-structured (key, ver) exactly-once design as the other
   * maintained artifacts: per-version deltas are deterministic in the
   * batch frame, so at-least-once redelivery re-merges identical rows
-  * (a no-op), and the shared [[VersionDrain]] protocol supplies the
-  * watermark, replay floor, and fold crash recovery. The delta itself
+  * (a no-op), and the shared [[SignedCells]] mechanism supplies the
+  * watermark, replay floor, fold and fold crash recovery. The delta itself
   * is a (groups)-row driver aggregate melted to (groups × columns)-
   * bounded rows — the feed is scanned once per side, nothing
   * data-sized reaches the driver (grouping columns must be
@@ -66,9 +66,6 @@ import org.apache.spark.sql.types._
   */
 object StatsStore {
 
-  /** The full-build base version; CDC versions are ≥ 0. */
-  val BaseVer: Long = -1L
-
   /** The `grp` value of an ungrouped artifact (and of a null group
     * value in a grouped one — a segment label, so null folds to a
     * sentinel rather than vanishing from the key). */
@@ -80,7 +77,8 @@ object StatsStore {
     * fails loudly instead of collecting a data-sized frame. */
   val MaxGroups: Int = 10000
 
-  private val Keys = Seq("col", "grp", "ver")
+  private val Cells = SignedCells(Seq("col", "grp"),
+    Seq("n", "nulls", "sum_cents", "sumsq_cents2"))
   private val statsSchema = StructType(Seq(
     StructField("col", StringType, nullable = false),
     StructField("grp", StringType, nullable = false),
@@ -158,8 +156,7 @@ object StatsStore {
       cols: Seq[String], numBuckets: Int = 4,
       groupCol: Option[String] = None): Unit = {
     val rows = momentRows(table, cols.map(c => c -> c), 1, groupCol.map(col))
-    val frame = toFrame(spark, rows).withColumn("ver", lit(BaseVer))
-    if (rows.nonEmpty) SnapshotStore.merge(spark, dir, frame, Keys, numBuckets)
+    if (rows.nonEmpty) Cells.build(spark, dir, toFrame(spark, rows), numBuckets)
   }
 
   /** One CDC batch of table changes as signed moment deltas under
@@ -168,12 +165,12 @@ object StatsStore {
     * the tracked non-key columns (±old/new images). `groupCol` (key or
     * payload) segments the deltas; each CDC side reads the group from
     * its own image, so group-moving updates net across segments.
-    * Idempotent per batchId. */
+    * Idempotent per batchId. The (groups × columns)-bounded delta is
+    * netted driver-side, so it skips the [[SignedCells.net]] plan. */
   def ingestBatch(spark: SparkSession, dir: String, changes: DataFrame,
       batchId: Long, keyCols: Seq[String], payloadCols: Seq[String],
       numBuckets: Int = 4, groupCol: Option[String] = None): Unit = {
-    require(batchId >= 0L,
-      s"batchId must be >= 0 (got $batchId): $BaseVer is reserved for the base build")
+    SignedCells.requireCdcVersion(batchId)
     def sideGroup(prefix: String): Option[Column] = groupCol.map { g =>
       if (keyCols.contains(g)) col(g) else col(s"${prefix}_$g")
     }
@@ -219,46 +216,31 @@ object StatsStore {
       .filter(r => r.getLong(2) != 0L || r.getLong(3) != 0L ||
         r.getDecimal(4).signum != 0 || r.getDecimal(5).signum != 0)
     if (net.nonEmpty)
-      SnapshotStore.merge(spark, dir,
-        toFrame(spark, net).withColumn("ver", lit(batchId)), Keys, numBuckets)
+      Cells.commit(spark, dir, toFrame(spark, net), batchId, numBuckets)
   }
 
-  /** Drain the CDC feed into the artifact (shared [[VersionDrain]]
-    * protocol), with the standard depth-triggered self-fold. */
+  /** Drain the CDC feed into the artifact ([[SignedCells.drain]]),
+    * with the standard depth-triggered self-fold. */
   def maintainFromCdc(spark: SparkSession, cdcDir: String, dir: String,
       checkpointDir: String, keyCols: Seq[String], payloadCols: Seq[String],
       numBuckets: Int = 4, autoFoldDepth: Option[Int] = None,
-      groupCol: Option[String] = None): Unit = {
-    VersionDrain.recoverFold(spark, dir)
-    val floors = VersionDrain.readFoldedThrough(spark, dir).toSeq
-    VersionDrain.drain(spark, cdcDir, checkpointDir, floors) { (batch, v) =>
+      groupCol: Option[String] = None): Unit =
+    SignedCells.drain(spark, cdcDir, checkpointDir, Seq(Cells -> dir),
+        autoFoldDepth) { (batch, v) =>
       ingestBatch(spark, dir, batch, v, keyCols, payloadCols, numBuckets,
         groupCol)
     }
-    autoFoldDepth.foreach { depth =>
-      if (VersionDrain.logDepth(spark, dir, BaseVer) > depth)
-        fold(spark, dir)
-    }
-  }
 
-  /** Fold the stats log (multi-measure [[VersionDrain.foldStoreMulti]];
-    * `n` is the liveness gauge — a (column, group) netting 0 rows
-    * drops). */
-  def fold(spark: SparkSession, dir: String): Unit =
-    VersionDrain.foldStoreMulti(spark, dir, Seq("col", "grp"),
-      Seq("n", "nulls", "sum_cents", "sumsq_cents2"), BaseVer)
+  /** Fold the stats log (`n` is the liveness gauge — a (column, group)
+    * netting 0 rows drops). */
+  def fold(spark: SparkSession, dir: String): Unit = Cells.fold(spark, dir)
 
   /** Live per-(column, group) stats: version-log sum plus the derived
     * gauges a quality monitor reads — null_rate (exact micro-units:
     * nulls·10⁶ DIV n) and mean_cents (exact integer DIV). Segment ×
     * columns-bounded. */
   def stats(spark: SparkSession, dir: String): DataFrame =
-    SnapshotStore.read(spark, dir)
-      .groupBy("col", "grp")
-      .agg(sum("n").as("n"), sum("nulls").as("nulls"),
-        sum("sum_cents").cast(DecimalType(38, 0)).as("sum_cents"),
-        sum("sumsq_cents2").cast(DecimalType(38, 0)).as("sumsq_cents2"))
-      .filter(col("n") > 0L)
+    Cells.live(spark, dir)
       .withColumn("null_rate_ppm", expr("nulls * 1000000L DIV n"))
       .withColumn("mean_cents", expr("sum_cents DIV n").cast("long"))
       .orderBy("col", "grp")

@@ -531,7 +531,7 @@ object Streams {
 
   /** One committed version's CDC rows, under that version's own file
     * schema. This is the read unit for VERSION-GRANULARITY consumers
-    * ([[graft.streaming.GraphEdgeStore.maintainFromCdc]]): a version is
+    * ([[VersionDrain.drain]], behind every maintained store): a version is
     * published atomically (see [[publishCdcVersion]]) and carries every
     * row of its upstream commit, so a consumer that processes whole
     * versions gets multi-row atomicity — e.g. whole order baskets — for
@@ -569,7 +569,7 @@ object Streams {
     * anything from row CO-OCCURRENCE within a batch (basket pairs,
     * per-order grouping) must NOT consume this stream — it must drain
     * at version granularity via [[listCdcVersions]] +
-    * [[readCdcVersion]], as [[GraphEdgeStore.maintainFromCdc]] does. */
+    * [[readCdcVersion]], as [[VersionDrain.drain]] does. */
   def cdcSource(spark: SparkSession, cdcDir: String,
       maxFilesPerTrigger: Int = 16): DataFrame =
     spark.readStream

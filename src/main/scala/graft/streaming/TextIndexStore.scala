@@ -23,13 +23,13 @@ import org.apache.spark.sql.functions._
   *    than positions bolted onto every posting.
   *
   * Same log-structured (key, ver) exactly-once design as
-  * [[GraphEdgeStore]] (signed deltas under the CDC version in the key;
+  * [[GraphEdgeStore]] (signed cells under the CDC version in the key;
   * at-least-once redelivery re-merges identical rows — a no-op), same
-  * [[VersionDrain]] consumption. One IMPORTANT contrast, documented
-  * because the r14 basket bug makes it worth stating: a document is ONE
-  * CDC row, so this consumer derives nothing from row co-occurrence —
-  * `update` rows are handled in place (−old text, +new text), where the
-  * basket store must refuse them. Per-row additivity also means any
+  * [[SignedCells]] netting, drain and fold. One IMPORTANT contrast,
+  * documented because the r14 basket bug makes it worth stating: a
+  * document is ONE CDC row, so this consumer derives nothing from row
+  * co-occurrence — `update` rows are handled in place (−old text, +new
+  * text), where the basket store must refuse them. Per-row additivity also means any
   * batching would be CONTENT-correct here; version granularity is kept
   * for the exactly-once watermark machinery, not for atomicity.
   *
@@ -42,12 +42,10 @@ import org.apache.spark.sql.functions._
   */
 object TextIndexStore {
 
-  /** The full-build base version; CDC versions are ≥ 0. */
-  val BaseVer: Long = -1L
-
-  private val PostingsKeys = Seq("word", "doc_id", "ver")
-  private val DoclenKeys = Seq("doc_id", "ver")
-  private val PositionsKeys = Seq("word", "doc_id", "pos", "ver")
+  private val PostingsCells = SignedCells(Seq("word", "doc_id"), Seq("tf"))
+  private val DoclenCells = SignedCells(Seq("doc_id"), Seq("dl"))
+  private val PositionCells =
+    SignedCells(Seq("word", "doc_id", "pos"), Seq("cnt"))
 
   /** (doc_id, word, tf, dl) of a (id, text) frame — the same
     * whitespace tokenizer the live BM25 uses; null text contributes
@@ -87,20 +85,13 @@ object TextIndexStore {
       numBuckets: Int = 16, positionsDir: Option[String] = None): Unit = {
     val tt = tokenTf(docs, idCol, textCol).localCheckpoint(true)
     try {
-      SnapshotStore.merge(spark, postingsDir,
-        tt.select(col("word"), col("doc_id"), lit(BaseVer).as("ver"),
-          col("tf")),
-        PostingsKeys, numBuckets)
-      SnapshotStore.merge(spark, doclenDir,
-        tt.groupBy("doc_id").agg(first("dl").as("dl"))
-          .withColumn("ver", lit(BaseVer)),
-        DoclenKeys, numBuckets)
-      positionsDir.foreach { pd =>
-        SnapshotStore.merge(spark, pd,
-          tokenPos(docs, idCol, textCol)
-            .withColumn("ver", lit(BaseVer)).withColumn("cnt", lit(1L)),
-          PositionsKeys, numBuckets)
-      }
+      PostingsCells.build(spark, postingsDir,
+        tt.select("word", "doc_id", "tf"), numBuckets)
+      DoclenCells.build(spark, doclenDir,
+        tt.groupBy("doc_id").agg(first("dl").as("dl")), numBuckets)
+      positionsDir.foreach(pd => PositionCells.build(spark, pd,
+        tokenPos(docs, idCol, textCol).withColumn("cnt", lit(1L)),
+        numBuckets))
     } finally graft.queries.GateMemo.unpersistCheckpoint(tt)
   }
 
@@ -113,8 +104,6 @@ object TextIndexStore {
       doclenDir: String, changes: DataFrame, batchId: Long,
       idCol: String = "doc_id", numBuckets: Int = 16,
       positionsDir: Option[String] = None): Unit = {
-    require(batchId >= 0L,
-      s"batchId must be >= 0 (got $batchId): $BaseVer is reserved for the base build")
     def side(textCol: String, types: Seq[String], sign: Int) =
       tokenTf(changes.filter(col("change_type").isin(types: _*)),
           idCol, textCol)
@@ -124,19 +113,13 @@ object TextIndexStore {
       .unionByName(side("old_text", Seq("delete", "update"), -1))
       .localCheckpoint(true)
     try {
-      val p = delta.groupBy("word", "doc_id").agg(sum("tf").as("tf"))
-        .filter(col("tf") =!= 0L)
-        .withColumn("ver", lit(batchId))
-      SnapshotStore.merge(spark, postingsDir, p, PostingsKeys, numBuckets)
+      PostingsCells.ingest(spark, postingsDir, delta, batchId, numBuckets)
       // per-doc length delta: dl rides every (doc, word) row of a side,
       // so collapse to one signed value per (doc, side) first — distinct
       // on (doc_id, dl) does it exactly (the two sides of an update
       // carry opposite signs, so a length-preserving update nets 0)
-      val dDelta = delta.select("doc_id", "dl").distinct()
-        .groupBy("doc_id").agg(sum("dl").as("dl"))
-        .filter(col("dl") =!= 0L)
-        .withColumn("ver", lit(batchId))
-      SnapshotStore.merge(spark, doclenDir, dDelta, DoclenKeys, numBuckets)
+      DoclenCells.ingest(spark, doclenDir,
+        delta.select("doc_id", "dl").distinct(), batchId, numBuckets)
     } finally graft.queries.GateMemo.unpersistCheckpoint(delta)
     // positional deltas: per-OCCURRENCE signed counts, same −old/+new
     // additivity as tf (each (doc, word, pos) key is unique per side,
@@ -147,84 +130,52 @@ object TextIndexStore {
         tokenPos(changes.filter(col("change_type").isin(types: _*)),
             idCol, textCol)
           .withColumn("cnt", lit(sign.toLong))
-      val pDelta = posSide("new_text", Seq("insert", "update"), 1)
-        .unionByName(posSide("old_text", Seq("delete", "update"), -1))
-        .groupBy("word", "doc_id", "pos").agg(sum("cnt").as("cnt"))
-        .filter(col("cnt") =!= 0L)
-        .withColumn("ver", lit(batchId))
-      SnapshotStore.merge(spark, pd, pDelta, PositionsKeys, numBuckets)
+      PositionCells.ingest(spark, pd,
+        posSide("new_text", Seq("insert", "update"), 1)
+          .unionByName(posSide("old_text", Seq("delete", "update"), -1)),
+        batchId, numBuckets)
     }
   }
 
-  /** Drain the CDC feed into both artifacts at version granularity
-    * (shared [[VersionDrain]] protocol: watermark skip, per-version
-    * idempotent replay, legacy-checkpoint refusal). */
+  /** Drain the CDC feed into every artifact at version granularity
+    * ([[SignedCells.drain]]: watermark skip, per-version idempotent
+    * replay, fold-marker floor, legacy-checkpoint refusal, and the
+    * depth-triggered self-fold). */
   def maintainFromCdc(spark: SparkSession, cdcDir: String,
       postingsDir: String, doclenDir: String, checkpointDir: String,
       idCol: String = "doc_id", numBuckets: Int = 16,
       autoFoldDepth: Option[Int] = None,
-      positionsDir: Option[String] = None): Unit = {
-    // folded-through markers floor the drain exactly as in the graph
-    // family: a folded version's rows are gone, so a lost watermark
-    // must not let it re-merge; recover a crashed fold swap first so
-    // the floor (and the store itself) is readable
-    val dirs = Seq(postingsDir, doclenDir) ++ positionsDir
-    dirs.foreach(d => VersionDrain.recoverFold(spark, d))
-    val floors = dirs.flatMap(d => VersionDrain.readFoldedThrough(spark, d))
-    VersionDrain.drain(spark, cdcDir, checkpointDir, floors) { (batch, v) =>
+      positionsDir: Option[String] = None): Unit =
+    SignedCells.drain(spark, cdcDir, checkpointDir,
+        Seq(PostingsCells -> postingsDir, DoclenCells -> doclenDir) ++
+          positionsDir.map(PositionCells -> _),
+        autoFoldDepth) { (batch, v) =>
       ingestBatch(spark, postingsDir, doclenDir, batch, v, idCol,
         numBuckets, positionsDir)
     }
-    // self-triggering compaction — same policy as the graph stores
-    // (GraphEdgeStore.maintainFromCdc): read amplification bounded at
-    // ~depth slices for one amortized rebuild per depth batches
-    autoFoldDepth.foreach { depth =>
-      VersionDrain.foldIfDeep(spark, postingsDir, Seq("word", "doc_id"),
-        "tf", BaseVer, depth)
-      VersionDrain.foldIfDeep(spark, doclenDir, Seq("doc_id"), "dl",
-        BaseVer, depth)
-      positionsDir.foreach(pd => VersionDrain.foldIfDeep(spark, pd,
-        Seq("word", "doc_id", "pos"), "cnt", BaseVer, depth))
-    }
-  }
 
-  /** Version-log depth (slices above the folded base) — the gauge the
-    * `autoFoldDepth` budget bounds. */
-  def logDepth(spark: SparkSession, dir: String): Long =
-    VersionDrain.logDepth(spark, dir, BaseVer)
-
-  /** Fold the postings log into a fresh base (shared
-    * [[VersionDrain.foldStore]] mechanism: stage-then-swap, bucket
-    * inheritance, `_folded_through` replay floor — the drain reads the
-    * marker from both stores, so a watermark loss after a fold cannot
-    * double-merge the folded prefix). Fold BOTH stores of a pair in the
-    * same maintenance window: they share one drain checkpoint, and the
-    * floor is the max over both markers. */
+  /** Fold the postings log into a fresh base ([[SignedCells.fold]]). Fold
+    * every store of a set in the same maintenance window: they share one
+    * drain checkpoint, and the floor is the max over their markers. */
   def foldPostings(spark: SparkSession, postingsDir: String): Unit =
-    VersionDrain.foldStore(spark, postingsDir, Seq("word", "doc_id"),
-      "tf", BaseVer)
+    PostingsCells.fold(spark, postingsDir)
 
   /** Fold the doc-length log (see [[foldPostings]]'s pairing note). */
   def foldDocLens(spark: SparkSession, doclenDir: String): Unit =
-    VersionDrain.foldStore(spark, doclenDir, Seq("doc_id"), "dl", BaseVer)
+    DoclenCells.fold(spark, doclenDir)
 
   /** Fold the positional log (see [[foldPostings]]'s pairing note). */
   def foldPositions(spark: SparkSession, positionsDir: String): Unit =
-    VersionDrain.foldStore(spark, positionsDir,
-      Seq("word", "doc_id", "pos"), "cnt", BaseVer)
+    PositionCells.fold(spark, positionsDir)
 
   /** Live postings: per-(word, doc) version-log sum, vanished terms
     * dropped. */
   def postings(spark: SparkSession, postingsDir: String): DataFrame =
-    SnapshotStore.read(spark, postingsDir)
-      .groupBy("word", "doc_id").agg(sum("tf").as("tf"))
-      .filter(col("tf") > 0L)
+    PostingsCells.live(spark, postingsDir)
 
   /** Live doc lengths: per-doc version-log sum; deleted docs drop. */
   def docLens(spark: SparkSession, doclenDir: String): DataFrame =
-    SnapshotStore.read(spark, doclenDir)
-      .groupBy("doc_id").agg(sum("dl").as("dl"))
-      .filter(col("dl") > 0L)
+    DoclenCells.live(spark, doclenDir)
 
   /** Live token occurrences (word, doc_id, pos): per-key version-log
     * sum of the signed occurrence counts; vanished occurrences drop.
@@ -233,9 +184,8 @@ object TextIndexStore {
   def positions(spark: SparkSession, positionsDir: String,
       termFilter: Option[Seq[String]] = None): DataFrame = {
     val raw = SnapshotStore.read(spark, positionsDir)
-    termFilter.fold(raw)(t => raw.filter(col("word").isInCollection(t)))
-      .groupBy("word", "doc_id", "pos").agg(sum("cnt").as("cnt"))
-      .filter(col("cnt") > 0L)
+    PositionCells.live(
+        termFilter.fold(raw)(t => raw.filter(col("word").isInCollection(t))))
       .select("word", "doc_id", "pos")
   }
 

@@ -2,32 +2,62 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared VERSION-GRANULARITY CDC drain (round 15) — the consumption
-  * protocol both maintained-artifact families ride
-  * ([[GraphEdgeStore]] for co-purchase graph stores,
-  * [[TextIndexStore]] for the BM25 index): iterate committed CDC
-  * versions past a watermark, hand each WHOLE version to the caller's
-  * ingest with `batchId = version`, and advance the watermark after the
-  * ingest commits.
+/** The consumption and compaction protocol of every maintained store:
+  * the VERSION-GRANULARITY CDC drain and the log-FOLD, with their
+  * crash recovery. The additive stores reach it through
+  * [[SignedCells]] ([[ActivityStore]], [[RfmStore]], [[FunnelStore]],
+  * [[GraphEdgeStore]], [[TextIndexStore]], [[StatsStore]]);
+  * [[SketchCatalogStore]] drains through it directly.
   *
-  * Why version granularity is the only safe batching for multi-row
-  * atomicity, and why the watermark may be lost without harm (ingest
-  * must be idempotent per version — version-in-key merges), is
-  * documented at [[GraphEdgeStore]] and [[Streams.cdcSource]]; this
-  * object is just the mechanism, factored so the two stores cannot
-  * drift apart in replay semantics.
+  * DRAIN: iterate committed CDC versions past a watermark, hand each
+  * WHOLE version to the caller's ingest with `batchId = version`, and
+  * advance the watermark after the ingest commits. Ingest must be
+  * idempotent per version (version-in-key merges), so the watermark
+  * only SKIPS work and losing it is always safe.
   *
-  * `extraFloors` lets a caller raise the skip floor above the
-  * watermark — e.g. [[GraphEdgeStore]] passes each store's
-  * `_folded_through` marker, because a folded version's rows are gone
-  * and a replay would double-count rather than no-op. */
+  * WHY NOT A FILE STREAM: an earlier drain consumed
+  * [[Streams.cdcSource]] (readStream + maxFilesPerTrigger=16), whose
+  * micro-batches are cut on FILE boundaries — but one committed CDC
+  * version is MANY part files (the diff plan's partitioning: 27-32 at
+  * shuffle=32), so a version whose files straddled the cap split an
+  * order's basket across two foreachBatch invocations and the
+  * cross-fragment pairs were silently never counted (562k of 1.196M
+  * edges missing at sf0.1/local[32] — BENCH_r14 gate errors). No
+  * file-granularity batching can keep a multi-row change whole; the
+  * atomicity unit the publish protocol actually guarantees is the
+  * VERSION (read whole with [[Streams.readCdcVersion]], atomic by the
+  * publish rename).
+  *
+  * FOLD: store growth is one row per (touched key, version) —
+  * batch-bounded per ingest but unbounded over the store's lifetime,
+  * and every read re-sums the whole log. The fold reads the CURRENT
+  * summed state, rebuilds a fresh store holding it under the base
+  * version alone, and swaps directories. Keys whose gauge nets ≤ 0 are
+  * physically dropped, matching what the live reads already hide. The
+  * fresh store inherits the live manifest's bucket count.
+  *
+  * EXACTLY-ONCE INTERACTION: folded version rows are GONE, so a drain
+  * whose watermark file was lost must NOT re-merge a folded version —
+  * pre-fold that replay re-merged identical rows (a no-op); post-fold
+  * it would DOUBLE COUNT. The fold therefore records the highest
+  * folded version in a `_folded_through` file inside the new store
+  * dir, and a drain's skip floor is the MAX of its watermark and every
+  * target store's marker (`extraFloors` of [[drain]]). Versions at or
+  * below the marker were by construction already ingested (the log
+  * being folded IS the record of what was ingested); versions above it
+  * replay idempotently exactly as before.
+  *
+  * CRASH PROTOCOL (data-first, destructive-last): the fresh store is
+  * fully built in `<dir>__fold_stage` — marker included — BEFORE the
+  * two renames (live -> `<dir>__fold_old`, stage -> live) and the
+  * delete of the old dir. A crash before the first rename leaves the
+  * live store untouched (stage garbage is overwritten by the next
+  * fold); between the renames the COMPLETE stage dir still exists
+  * under its stage name, and [[recoverFold]] — called by every
+  * subsequent fold AND drain — completes the swap automatically; after
+  * the second rename only the dead `__fold_old` remains, swept on the
+  * next fold/drain. */
 private[graft] object VersionDrain {
-
-  // ---- log-fold compaction, shared mechanism --------------------------
-  // (History and hazards documented at [[GraphEdgeStore]]'s fold
-  // section: stage-then-swap crash protocol, the `_folded_through`
-  // marker that must floor any replay because folded version rows are
-  // GONE, bucket-count inheritance from the live manifest.)
 
   private def foldedThroughPath(dir: String) =
     new org.apache.hadoop.fs.Path(dir, "_folded_through")
@@ -62,7 +92,7 @@ private[graft] object VersionDrain {
     * the round-15 design ("recovery: rename it to the live name") is
     * now automatic — a store can always be read after any
     * single-crash history. Single-writer contract applies (same as
-    * [[foldStore]]). */
+    * [[foldStoreMulti]]). */
   private[graft] def recoverFold(spark: SparkSession, dir: String): Boolean = {
     val base = new org.apache.hadoop.fs.Path(dir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -87,23 +117,15 @@ private[graft] object VersionDrain {
     recovered
   }
 
-  /** Fold one store's version log into a fresh BaseVer-only base and
-    * swap it in. `keys` are the logical keys (without `ver`); `valueCol`
-    * the additive measure; `baseVer` the store family's base sentinel.
-    * Keys whose net value is ≤ 0 are physically dropped. */
-  private[graft] def foldStore(spark: SparkSession, dir: String,
-      keys: Seq[String], valueCol: String, baseVer: Long): Unit =
-    foldStoreMulti(spark, dir, keys, Seq(valueCol), baseVer)
-
-  /** [[foldStore]] for stores carrying SEVERAL additive measures per
-    * key (e.g. the profile-stats store's n/nulls/sum/sumsq): every
-    * measure is version-summed; the FIRST measure is the liveness
-    * gauge — keys where it nets ≤ 0 are dropped (a count of zero means
-    * the key has left the corpus). */
+  /** Fold one store's version log into a fresh `baseVer`-only base and
+    * swap it in (the FOLD and CRASH PROTOCOL of the object doc). `keys`
+    * are the logical keys (without `ver`); every measure in `valueCols`
+    * is version-summed; the FIRST measure is the liveness gauge — keys
+    * where it nets ≤ 0 are dropped (a count of zero means the key has
+    * left the corpus). */
   private[graft] def foldStoreMulti(spark: SparkSession, dir: String,
       keys: Seq[String], valueCols: Seq[String], baseVer: Long): Unit = {
     import org.apache.spark.sql.functions.{col, lit, max, sum}
-    require(valueCols.nonEmpty, "foldStoreMulti: no measure columns")
     recoverFold(spark, dir) // complete a crashed predecessor's swap first
     val base = new org.apache.hadoop.fs.Path(dir)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -128,6 +150,11 @@ private[graft] object VersionDrain {
     // it returns, so the live dir it reads is renamed only afterwards
     SnapshotStore.merge(spark, stage.toString, summed,
       keys :+ "ver", numBuckets)
+    // every key netted out: merge committed nothing, and the new base is
+    // an empty store (still readable, still carrying the marker)
+    if (SnapshotStore.currentManifest(spark, stage.toString).isEmpty)
+      SnapshotStore.commitEmpty(spark, stage.toString, numBuckets,
+        summed.schema)
     val out = fs.create(foldedThroughPath(stage.toString), true)
     try out.write(through.toString.getBytes(
       java.nio.charset.StandardCharsets.UTF_8))
@@ -150,23 +177,6 @@ private[graft] object VersionDrain {
     else SnapshotStore.read(spark, dir)
       .filter(col("ver") =!= baseVer)
       .agg(countDistinct("ver")).head().getLong(0)
-  }
-
-  /** Depth-triggered fold: compact when the version log exceeds
-    * `maxDepth` slices, otherwise a gauge read and nothing else.
-    * Returns true when a fold ran. This is the self-triggering
-    * maintenance policy — callers drop it after their drain and the
-    * store keeps its own read amplification bounded, no runbook: cost
-    * is one store-sized rebuild every ~maxDepth batches (amortized
-    * 1/maxDepth of a rebuild per batch), in exchange for every read
-    * summing at most maxDepth+1 slices. */
-  private[graft] def foldIfDeep(spark: SparkSession, dir: String,
-      keys: Seq[String], valueCol: String, baseVer: Long,
-      maxDepth: Int): Boolean = {
-    require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
-    val deep = logDepth(spark, dir, baseVer) > maxDepth
-    if (deep) foldStore(spark, dir, keys, valueCol, baseVer)
-    deep
   }
 
   private def watermarkPath(checkpointDir: String) =

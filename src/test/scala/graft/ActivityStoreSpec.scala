@@ -91,4 +91,63 @@ class ActivityStoreSpec extends AnyFunSuite {
       .filter(col("day") === "2024-03-09").head()
     assert(d9.getAs[Long]("dau") == 1L && d9.getAs[Long]("wau") == 1L)
   }
+
+  test("a fold after every pair is retracted leaves a readable empty store") {
+    val dir = freshDir()
+    ActivityStore.ingestBatch(spark, dir, change(
+      (1L, "insert", null, ts("2024-03-01T10:00"), null, 7L)), 0L)
+    ActivityStore.ingestBatch(spark, dir, change(
+      (1L, "delete", ts("2024-03-01T10:00"), null, 7L, null)), 1L)
+    assert(act(dir).isEmpty)
+    ActivityStore.fold(spark, dir)
+    assert(act(dir).isEmpty, "the folded store must still be readable")
+    assert(streaming.VersionDrain.readFoldedThrough(spark, dir).contains(1L))
+    // life continues: the next version lands on the empty base
+    ActivityStore.ingestBatch(spark, dir, change(
+      (2L, "insert", null, ts("2024-03-02T10:00"), null, 8L)), 2L)
+    assert(act(dir) == Set("2024-03-02" -> 8L))
+  }
+
+  // Job-count pins ([[JobCount]]): at store sizes a Spark job costs more
+  // than the rows it moves, so a change in these counts is a change in
+  // the store's cost and must be measured, not just re-pinned.
+
+  private def pinned(dir: String): Unit =
+    ActivityStore.ingestBatch(spark, dir, change(
+      (1L, "insert", null, ts("2024-03-01T10:00"), null, 1L),
+      (2L, "insert", null, ts("2024-03-02T10:00"), null, 2L)), 0L)
+
+  test("job pin: a one-version ingestBatch runs 3 Spark jobs") {
+    val dir = freshDir()
+    pinned(dir)
+    val (_, jobs) = JobCount(spark)(ActivityStore.ingestBatch(spark, dir,
+      change((3L, "insert", null, ts("2024-03-02T11:00"), null, 3L)), 1L))
+    assert(jobs == 3, s"ingestBatch ran $jobs jobs")
+  }
+
+  test("job pin: maintainFromCdc draining two versions and folding runs 18 Spark jobs") {
+    import spark.implicits._
+    val b = freshDir()
+    val (cdc, dir, ckpt) = (s"$b/cdc", s"$b/store", s"$b/ckpt")
+    pinned(dir)
+    def ver(v: Int, rows: Seq[(Long, String, java.time.LocalDateTime,
+        java.time.LocalDateTime, java.lang.Long, java.lang.Long)]): Unit =
+      change(rows: _*).write.parquet(s"$cdc/__version=$v")
+    ver(1, Seq((3L, "insert", null, ts("2024-03-03T10:00"), null, 3L)))
+    ver(2, Seq((1L, "delete", ts("2024-03-01T10:00"), null, 1L, null)))
+    val (_, jobs) = JobCount(spark)(ActivityStore.maintainFromCdc(
+      spark, cdc, dir, ckpt, autoFoldDepth = Some(1)))
+    assert(streaming.VersionDrain.readFoldedThrough(spark, dir).contains(2L))
+    assert(act(dir) == Set("2024-03-02" -> 2L, "2024-03-03" -> 3L))
+    assert(jobs == 18, s"maintainFromCdc ran $jobs jobs")
+  }
+
+  test("job pin: a served activeUsers collect runs 12 Spark jobs") {
+    val dir = freshDir()
+    pinned(dir)
+    val (rows, jobs) = JobCount(spark)(
+      ActivityStore.activeUsers(spark, dir).collect())
+    assert(rows.nonEmpty)
+    assert(jobs == 12, s"activeUsers ran $jobs jobs")
+  }
 }

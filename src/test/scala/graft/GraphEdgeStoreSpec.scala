@@ -292,7 +292,7 @@ class GraphEdgeStoreSpec extends AnyFunSuite {
     GraphEdgeStore.foldEdges(spark, eDir)
     assert(rawRows() == 1, "fold collapses the log to current state")
     assert(edgeSet(eDir) == Set((10L, 20L, 1L)), "served view unchanged")
-    assert(GraphEdgeStore.readFoldedThrough(spark, eDir).contains(2L))
+    assert(streaming.VersionDrain.readFoldedThrough(spark, eDir).contains(2L))
     // THE hazard the marker closes: pre-fold, a lost watermark replayed
     // folded versions as identical-row no-ops; post-fold their rows are
     // GONE and a replay would double count — the folded-through floor
@@ -308,7 +308,7 @@ class GraphEdgeStoreSpec extends AnyFunSuite {
     // and a second fold folds the new tail too
     GraphEdgeStore.foldEdges(spark, eDir)
     assert(rawRows() == 2)
-    assert(GraphEdgeStore.readFoldedThrough(spark, eDir).contains(3L))
+    assert(streaming.VersionDrain.readFoldedThrough(spark, eDir).contains(3L))
   }
 
   test("autoFoldDepth keeps the version log bounded across drains") {
@@ -325,13 +325,15 @@ class GraphEdgeStoreSpec extends AnyFunSuite {
     GraphEdgeStore.build(spark, eDir, li((1L, 10L), (1L, 20L)))
     ver(1, Seq((2L, 10L), (2L, 20L))); drain()
     ver(2, Seq((3L, 10L), (3L, 20L))); drain()
-    assert(GraphEdgeStore.logDepth(spark, eDir) == 2,
+    assert(streaming.VersionDrain.logDepth(spark, eDir,
+      streaming.SignedCells.BaseVer) == 2,
       "at the budget: no fold yet")
-    assert(GraphEdgeStore.readFoldedThrough(spark, eDir).isEmpty)
+    assert(streaming.VersionDrain.readFoldedThrough(spark, eDir).isEmpty)
     ver(3, Seq((4L, 10L), (4L, 30L))); drain()
-    assert(GraphEdgeStore.logDepth(spark, eDir) == 0,
+    assert(streaming.VersionDrain.logDepth(spark, eDir,
+      streaming.SignedCells.BaseVer) == 0,
       "over the budget: the drain folded its own log")
-    assert(GraphEdgeStore.readFoldedThrough(spark, eDir).contains(3L))
+    assert(streaming.VersionDrain.readFoldedThrough(spark, eDir).contains(3L))
     assert(edgeSet(eDir) == Set((10L, 20L, 3L), (10L, 30L, 1L)),
       "served content unchanged by the auto-fold")
     // and the folded floor still guards a lost watermark
@@ -375,7 +377,7 @@ class GraphEdgeStoreSpec extends AnyFunSuite {
       "recovered store must serve the folded history plus the new version")
     assert(!stage.exists, "stage renamed to live")
     assert(!old.exists, "dead pre-fold dir swept")
-    assert(GraphEdgeStore.readFoldedThrough(spark, eDir).contains(1L),
+    assert(streaming.VersionDrain.readFoldedThrough(spark, eDir).contains(1L),
       "folded-through marker survives recovery")
     // and the recovered floor still guards a lost watermark: folded v1
     // must not re-merge, unfolded v2 replays as an idempotent no-op
@@ -414,8 +416,8 @@ class GraphEdgeStoreSpec extends AnyFunSuite {
     assert(streaming.SnapshotStore.read(spark, cDir)
       .filter(org.apache.spark.sql.functions.col("l_partkey") === 30L)
       .count() == 0)
-    assert(GraphEdgeStore.readFoldedThrough(spark, dDir).contains(0L))
-    assert(GraphEdgeStore.readFoldedThrough(spark, cDir).contains(0L))
+    assert(streaming.VersionDrain.readFoldedThrough(spark, dDir).contains(0L))
+    assert(streaming.VersionDrain.readFoldedThrough(spark, cDir).contains(0L))
   }
 
   test("fold inherits the live store's bucket count") {
@@ -519,5 +521,18 @@ class GraphEdgeStoreSpec extends AnyFunSuite {
     val r = servedLift.collect().head
     assert((r.getLong(0), r.getLong(1), r.getLong(2)) == (10L, 20L, 3L))
     assert(r.getDouble(3) == 1.3333 && r.getDouble(4) == 1.0)
+  }
+
+  test("job pin: a served basketPairs collect runs 2 Spark jobs") {
+    val dir = freshDir()
+    GraphEdgeStore.build(spark, dir,
+      li((1L, 10L), (1L, 20L), (1L, 30L), (2L, 10L), (2L, 20L)))
+    GraphEdgeStore.ingestBatch(spark, dir,
+      li((3L, 10L), (3L, 20L)).withColumn("change_type", lit("insert")), 0L)
+    val (rows, jobs) = JobCount(spark)(
+      GraphEdgeStore.basketPairs(spark, dir).collect())
+    assert(rows.nonEmpty)
+    // one exchange for the version-log sum, then the top-k result
+    assert(jobs == 2, s"basketPairs ran $jobs jobs")
   }
 }

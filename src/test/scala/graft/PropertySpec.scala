@@ -664,4 +664,81 @@ object PropertySpec extends Properties("graft") {
         rows(TextIndexStore.positions(spark, o2))
     }
   }
+
+  property("signed cells: live read == net-sum model; fold and re-drain change nothing") = {
+    // random batch sequences over a 3-key space, drained one CDC version
+    // at a time: inserts of (key, value) items, deletes of live items,
+    // in-batch insert+delete pairs that cancel, duplicate keys, empty
+    // batches; a fold at a random point; 1 vs 4 buckets. The measures
+    // are (g, m) = (item count, value sum), so the gauge g is ≥ 0 and
+    // g = 0 implies m = 0, the invariant every additive store keeps.
+    sealed trait Op
+    case class Ins(k: Long, x: Long) extends Op
+    case class Del(k: Long) extends Op
+    case class Cancel(k: Long, x: Long) extends Op
+    val key = Gen.chooseNum(0L, 2L)
+    val value = Gen.chooseNum(-3L, 3L)
+    val op: Gen[Op] = Gen.frequency(
+      3 -> Gen.zip(key, value).map(Ins.tupled),
+      2 -> key.map(Del),
+      1 -> Gen.zip(key, value).map(Cancel.tupled))
+    val batch = Gen.frequency(1 -> Gen.const(List.empty[Op]),
+      4 -> Gen.chooseNum(1, 4).flatMap(Gen.listOfN(_, op)))
+    val batches = Gen.chooseNum(1, 4).flatMap(Gen.listOfN(_, batch))
+    forAll(batches, Gen.oneOf(1, 4), Gen.chooseNum(0, 3)) {
+        (ops, buckets, foldAt) =>
+      import spark.implicits._
+      import streaming.{SignedCells, SnapshotStore, VersionDrain}
+      val cells = SignedCells(Seq("k"), Seq("g", "m"))
+      val dir0 = java.nio.file.Files
+        .createTempDirectory("graft_cells_prop").toString
+      val (cdc, dir, ckpt) = (s"$dir0/cdc", s"$dir0/store", s"$dir0/ckpt")
+      var items = Map.empty[Long, List[Long]] // the model: live items per key
+      def model: Set[(Long, Long, Long)] = items.collect {
+        case (k, xs) if xs.nonEmpty => (k, xs.size.toLong, xs.sum)
+      }.toSet
+      def version: Option[Long] =
+        SnapshotStore.currentManifest(spark, dir).map(_.version)
+      def live: Set[(Long, Long, Long)] =
+        if (version.isEmpty) Set.empty
+        else cells.live(spark, dir).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      def drain(): Unit =
+        SignedCells.drain(spark, cdc, ckpt, Seq(cells -> dir), None) {
+          (b, v) => cells.ingest(spark, dir, b, v, buckets)
+        }
+      var lastCommitted = Option.empty[Long]
+      var ok = true
+      ops.zipWithIndex.foreach { case (bOps, v) =>
+        val rows = bOps.flatMap {
+          case Ins(k, x) =>
+            items += k -> (x :: items.getOrElse(k, Nil)); Seq((k, 1L, x))
+          case Del(k) => items.getOrElse(k, Nil) match {
+            case x :: rest => items += k -> rest; Seq((k, -1L, -x))
+            case Nil => Nil
+          }
+          case Cancel(k, x) => Seq((k, 1L, x), (k, -1L, -x))
+        }
+        rows.toDF("k", "g", "m").coalesce(1)
+          .write.parquet(s"$cdc/__version=$v")
+        val allZero = rows.groupBy(_._1).values
+          .forall(rs => rs.map(_._2).sum == 0L && rs.map(_._3).sum == 0L)
+        val before = version
+        drain()
+        if (allZero) ok &&= version == before // no version committed
+        else lastCommitted = Some(v.toLong)
+        ok &&= live == model
+        if (v == foldAt && version.nonEmpty) {
+          cells.fold(spark, dir)
+          ok &&= live == model &&
+            VersionDrain.readFoldedThrough(spark, dir) == lastCommitted
+        }
+      }
+      // a lost watermark re-drains the whole feed: folded versions are
+      // floored, the rest re-merge identical rows
+      new java.io.File(s"$ckpt/_version_watermark").delete()
+      drain()
+      ok && live == model
+    }
+  }
 }

@@ -371,34 +371,18 @@ class SnapshotStoreSpec extends AnyFunSuite {
 
   test("a one-key merge into a 4-bucket snapshot runs 4 Spark jobs") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val dir = freshDir("snap_merge_jobs").getAbsolutePath
     SnapshotStore.merge(spark, dir,
       (1L to 40L).map(k => (k, s"v$k")).toDF("k", "v"), Seq("k"), numBuckets = 4)
     val batch = Seq((7L, "w7")).toDF("k", "v")
-    // count only the jobs this thread starts, tagged by a local property
-    val tag = "graft.test.merge_jobs"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(tag) != null))
-          jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(tag, "1")
-    try SnapshotStore.merge(spark, dir, batch, Seq("k"), numBuckets = 4)
-    finally {
-      sc.setLocalProperty(tag, null)
-      org.apache.spark.graft.ListenerBusHook.drain(sc)
-      sc.removeSparkListener(listener)
-    }
+    val (_, jobs) = JobCount(spark)(
+      SnapshotStore.merge(spark, dir, batch, Seq("k"), numBuckets = 4))
     // the same merge ran 7 jobs before the touched buckets were found in
     // the job that fills the checkpoint and the bucket read took the
     // manifest's schema: an eager checkpoint job, a distinct-bucket pass
     // with its own exchange (two jobs) and a footer-inference job, where
     // one checkpoint-filling collect now stands
-    assert(jobs.get == 4, s"merge ran ${jobs.get} jobs")
+    assert(jobs == 4, s"merge ran $jobs jobs")
     assert(SnapshotStore.read(spark, dir).filter($"k" === 7L).head.getString(1) == "w7")
   }
 
