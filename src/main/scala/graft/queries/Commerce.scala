@@ -152,12 +152,13 @@ object Commerce {
       |FROM s GROUP BY 1, 2, 3
       |ORDER BY r_score, f_score, m_score""".stripMargin) { (s, d) =>
     // ONE scan + one o_custkey shuffle builds the per-customer frame;
-    // checkpoint it because three consumers (the corpus max-date probe,
-    // the quartile aggregate, and the scoring pass) would otherwise
-    // each re-execute the scan+shuffle subtree (Catalyst doesn't
-    // CTE-dedup DataFrame branches). The store-served path skips the
-    // checkpoint: its m is artifact-sized, so three re-reads are cheap
-    // and leak-free.
+    // checkpoint it because its two consumers (the quartile aggregate
+    // and the scoring pass) would otherwise each re-execute the
+    // scan+shuffle subtree (Catalyst doesn't CTE-dedup DataFrame
+    // branches). The store-served path skips the checkpoint: a small
+    // store's log reads as one partition (SignedCells.readLog), so each
+    // consumer re-sums the artifact-sized log inside its own stage, and
+    // a checkpoint would add a job to a 2-job serve.
     rfmFrom(Tables.orders(s, d).groupBy("o_custkey").agg(
       count(lit(1)).as("freq"),
       sum(round(col("o_totalprice") * 100, 0).cast("bigint")).as("cents"),
@@ -173,11 +174,14 @@ object Commerce {
     * its customers×active-days artifact (freq/cents are additive sums,
     * recency is max over days with positive net count — delete-safe). */
   def rfmFrom(m: DataFrame): DataFrame = {
-    val mx = m.agg(to_date(max("last_o")).as("hi"))
-    val base = m.crossJoin(broadcast(mx))
-      .select(col("o_custkey"),
-        datediff(col("hi"), to_date(col("last_o"))).cast("bigint").as("rec"),
-        col("freq"), col("cents"))
+    // recency scores on -(epoch day of the last order): days since the
+    // corpus' last order shifted by that constant, so no max-date probe.
+    // Quartiles interpolate on quarter positions over integer days (the
+    // doubles are exact), and the scores are strict comparisons, so
+    // both are exactly shift-invariant
+    val base = m.select(col("o_custkey"),
+      (-unix_date(to_date(col("last_o")))).cast("bigint").as("rec"),
+      col("freq"), col("cents"))
     val q = base.agg(
       percentile(col("rec"), lit(0.25)).as("r1"),
       percentile(col("rec"), lit(0.5)).as("r2"),

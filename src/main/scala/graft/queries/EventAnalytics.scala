@@ -287,13 +287,13 @@ object EventAnalytics {
     * decomposable over a window (distinct doesn't sum), and the naive
     * day×day self-join rescans the activity frame 7×. Instead each
     * (user, day) activity CONTRIBUTES itself to the 7 windows ending at
-    * day..day+6 — a bounded ×7 `sequence`+`explode` on the already
-    * user-deduped daily frame, then one distinct + count per window
-    * end. Map-side bounded fan-out beats a self-join at any corpus
-    * size. Window ends past the observed range are clipped so every
-    * reported day has a fully defined (possibly partial-history) WAU.
-    * Stickiness = DAU/WAU — the engagement ratio product analytics
-    * reads daily. */
+    * day..day+6 — a bounded ×7 `explode` on the already user-deduped
+    * daily frame, then one (window-end, user) aggregate and one count
+    * per window end, which yields DAU and WAU together. Map-side
+    * bounded fan-out beats a self-join at any corpus size. Only window
+    * ends that are activity days are reported, so every reported day
+    * has a fully defined (possibly partial-history) WAU. Stickiness =
+    * DAU/WAU — the engagement ratio product analytics reads daily. */
   /** The DAU / rolling-WAU / stickiness computation over a
     * caller-supplied DISTINCT (d, user_id) activity frame — the seam
     * the maintained activity store serves through (the
@@ -301,31 +301,27 @@ object EventAnalytics {
     * the frame from the event log; `ActivityStore.activity` derives
     * the identical frame from its user×day-sized artifact, so the two
     * reads share every expression from here down. */
-  def activeUsersFrom(act: DataFrame): DataFrame = {
-    val hiRow = act.agg(max("d")).head()
-    val dau = act.groupBy("d").agg(count(lit(1)).as("dau"))
-    if (hiRow.isNullAt(0))
-      // empty log → empty summary under the output schema
-      dau.select(date_format(col("d"), "yyyy-MM-dd").as("day"),
-        col("dau"), col("dau").as("wau"),
-        lit(null).cast("double").as("stickiness")).limit(0)
-    else {
-      val hi = hiRow.getDate(0)
-      // each activity feeds the 7 window-ends it is visible from,
-      // clipped at the last observed day
-      val contrib = act
-        .select(explode(sequence(col("d"),
-          least(date_add(col("d"), 6), lit(hi)))).as("wend"), col("user_id"))
-        .distinct()
-      val wau = contrib.groupBy(col("wend").as("d"))
-        .agg(count(lit(1)).as("wau"))
-      dau.join(wau, "d")
-        .select(date_format(col("d"), "yyyy-MM-dd").as("day"),
-          col("dau"), col("wau"),
-          round(col("dau").cast("double") / col("wau"), 4).as("stickiness"))
-        .orderBy("day")
-    }
-  }
+  def activeUsersFrom(act: DataFrame): DataFrame =
+    // one pass: each activity feeds the 7 window-ends d..d+6 it is
+    // visible from, flagged where the window ends on the activity day
+    // itself; per (window-end, user) the flag's max says "active that
+    // day", so per window-end the row count is WAU and the flag count
+    // DAU. A window-end with DAU 0 is not an activity day and drops,
+    // so every kept day lies inside the observed range with no clip.
+    // (`transform` over offsets, not `sequence(d, d + 6)`, so the day
+    // column keeps the input's nullability.)
+    act.select(col("d"), col("user_id"),
+        explode(transform(sequence(lit(0), lit(6)),
+          i => date_add(col("d"), i))).as("wend"))
+      .groupBy("wend", "user_id")
+      .agg(max(col("wend") === col("d")).as("today"))
+      .groupBy("wend")
+      .agg(count(when(col("today"), 1)).as("dau"), count(lit(1)).as("wau"))
+      .filter(col("dau") > 0L)
+      .select(date_format(col("wend"), "yyyy-MM-dd").as("day"),
+        col("dau"), col("wau"),
+        round(col("dau").cast("double") / col("wau"), 4).as("stickiness"))
+      .orderBy("day")
 
   val qActiveUsers = Q(
     "q_active_users",

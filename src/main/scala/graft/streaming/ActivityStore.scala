@@ -32,7 +32,11 @@ import org.apache.spark.sql.functions._
   * (d, user_id) frame `q_active_users` derives from the log —
   * [[graft.queries.EventAnalytics.activeUsersFrom]] is the shared
   * seam, so store-served DAU/WAU equals the registered key EXACTLY
-  * (gate-pinned).
+  * (gate-pinned). A log no larger than
+  * `spark.sql.adaptive.advisoryPartitionSizeInBytes` (64 MB) is read
+  * as one partition ([[SignedCells.readLog]]), so the net-sum and the
+  * seam plan no exchange and a served DAU/WAU collect is ONE Spark
+  * job; a larger log keeps the exchange-based plan.
   *
   * 100 TB shape: batch cost is one batch-sized aggregation to
   * pair-deltas; serving never reads an event; artifact size is

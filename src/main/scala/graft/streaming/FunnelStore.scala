@@ -47,7 +47,8 @@ import org.apache.spark.sql.functions._
   * Serving: one artifact-sized net-sum → the distinct live cell frame
   * ([[stepEvents]]), then the SAME [[graft.operators.Funnel]]
   * derivations the registered keys run — store-served funnel ==
-  * the registered key EXACTLY (gate-pinned), the log never read.
+  * the registered key EXACTLY (gate-pinned), the log never read. A
+  * small log reads as one partition ([[SignedCells.readLog]]).
   */
 object FunnelStore {
 

@@ -277,7 +277,8 @@ object GraphEdgeStore {
     * `q_basket_pairs` output via the shared
     * [[graft.queries.Commerce.basketPairsFrom]] seam over the
     * maintained edge weights (w IS "orders containing both parts"),
-    * the order log never read. */
+    * the order log never read. Over a one-partition log ([[edges]])
+    * the sum and the top-k run as ONE Spark job. */
   def basketPairs(spark: SparkSession, edgeDir: String): DataFrame =
     graft.queries.Commerce.basketPairsFrom(
       edges(spark, edgeDir).select(col("u").as("part_a"),
@@ -330,7 +331,10 @@ object GraphEdgeStore {
   /** The current weighted edge list: per-(u, v) sum over the version
     * log, fully-deleted edges dropped. One edge-sized scan + hash agg —
     * the frame every `q_graph_*` plan consumes in place of its live
-    * lineitem derivation when the store is maintained. */
+    * lineitem derivation when the store is maintained. A log no larger
+    * than `spark.sql.adaptive.advisoryPartitionSizeInBytes` (64 MB) is
+    * read as one partition ([[SignedCells.readLog]]), so the sum plans
+    * no exchange; a larger log keeps the exchange-based plan. */
   def edges(spark: SparkSession, edgeDir: String): DataFrame =
     EdgeCells.live(spark, edgeDir)
 

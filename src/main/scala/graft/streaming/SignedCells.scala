@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, sum}
+import org.apache.spark.sql.internal.SQLConf
 
 /** One ADDITIVE maintained artifact: signed cells keyed by `keys` and
   * the CDC version `ver`, carrying the additive `measures` — a Z-set
@@ -19,7 +20,9 @@ import org.apache.spark.sql.functions.{col, lit, sum}
   *    merge. An all-zero batch commits no version (merge touches no
   *    bucket).
   *  - LIVE READ ([[live]]): sum the measures per key over the whole
-  *    version log and keep the keys whose gauge is > 0.
+  *    version log and keep the keys whose gauge is > 0. A small log is
+  *    read as one partition ([[SignedCells.readLog]]), so a serve over
+  *    it plans no exchange.
   *  - FOLD ([[fold]]): compact the log into a fresh [[SignedCells.BaseVer]]
   *    base ([[VersionDrain.foldStoreMulti]]: stage-then-swap, and the
   *    `_folded_through` replay floor).
@@ -75,9 +78,9 @@ private[graft] final case class SignedCells(keys: Seq[String],
     log.groupBy(keys.map(col): _*).agg(sums.head, sums.tail: _*)
       .filter(col(measures.head) > 0L)
 
-  /** The live cells of the store at `dir`. */
+  /** The live cells of the store at `dir` ([[SignedCells.readLog]]). */
   def live(spark: SparkSession, dir: String): DataFrame =
-    live(SnapshotStore.read(spark, dir))
+    live(SignedCells.readLog(spark, dir))
 
   /** Fold the version log into a fresh base; keys whose gauge nets ≤ 0
     * are physically dropped. */
@@ -95,6 +98,27 @@ private[graft] object SignedCells {
   def requireCdcVersion(batchId: Long): Unit =
     require(batchId >= 0L,
       s"batchId must be >= 0 (got $batchId): $BaseVer is reserved for the base build")
+
+  /** The version log at `dir` as a serve reads it. A log whose planned
+    * size is at most `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+    * (64 MB by default: the size AQE itself targets for one partition)
+    * is read as ONE partition. `SinglePartition` satisfies every
+    * clustered, ordered and all-tuples distribution, so the log-sum and
+    * the aggregates, joins and `orderBy` a serve plans over it need no
+    * exchange, and the serve runs as one stage instead of one AQE stage
+    * submission per exchange (an exchange, a broadcast or a range-sort
+    * sample each cost a Spark job, and at store sizes a job costs more
+    * than the rows it moves). The planned size comes from the file
+    * listing the read already did, so deciding runs no Spark job. A
+    * larger log keeps the exchange-based plan. */
+  def readLog(spark: SparkSession, dir: String): DataFrame = {
+    val log = SnapshotStore.read(spark, dir)
+    val onePartition =
+      spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    if (log.queryExecution.optimizedPlan.stats.sizeInBytes <= onePartition)
+      log.coalesce(1)
+    else log
+  }
 
   /** Drain `cdcDir` into every `(spec, dir)` target that one feed
     * maintains, then fold each target whose log is deeper than

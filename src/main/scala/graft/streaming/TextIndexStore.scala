@@ -183,7 +183,7 @@ object TextIndexStore {
     * reads only its own terms' rows). */
   def positions(spark: SparkSession, positionsDir: String,
       termFilter: Option[Seq[String]] = None): DataFrame = {
-    val raw = SnapshotStore.read(spark, positionsDir)
+    val raw = SignedCells.readLog(spark, positionsDir)
     PositionCells.live(
         termFilter.fold(raw)(t => raw.filter(col("word").isInCollection(t))))
       .select("word", "doc_id", "pos")

@@ -235,10 +235,11 @@ object DumpPlans {
       "distinct is computed by CONTRIBUTION EXPANSION: the user-deduped " +
       "daily activity explodes to its ≤7 visible window-ends (bounded " +
       "map-side fan-out, an Expand/Generate over the small frame), then " +
-      "one distinct + per-day count. What to check: events is scanned " +
-      "ONCE (plus the 1-row max-day probe); no day×day self-join of the " +
-      "activity frame; the DAU↔WAU join runs over calendar-bounded " +
-      "frames (days × users-per-day, never raw events)."),
+      "one (window-end, user) aggregate + per-day count that yields DAU " +
+      "and WAU together. What to check: events is scanned ONCE; no " +
+      "day×day self-join of the activity frame and no DAU↔WAU join; " +
+      "both aggregates run over calendar-bounded frames (days × " +
+      "users-per-day, never raw events)."),
     "q_event_transitions" -> ("Next-event transitions (round 13). One " +
       "user-partitioned Window (lead) — the sessionizer's shuffle grain, " +
       "a hot user is one partition's sort, never a cross product — " +
@@ -284,8 +285,8 @@ object DumpPlans {
       "anywhere; the top-20 fuses to TakeOrderedAndProject — no " +
       "global sort of the pair table."),
     "q_rfm" -> ("RFM segmentation (round 13). One o_custkey hash agg " +
-      "builds the per-customer frame, CHECKPOINTED because its three " +
-      "consumers (max-date probe, quartile aggregate, scoring pass) " +
+      "builds the per-customer frame, CHECKPOINTED because its two " +
+      "consumers (quartile aggregate, scoring pass) " +
       "would otherwise each re-run the scan+shuffle; quartile " +
       "thresholds are a 1-ROW global aggregate cross-joined back as a " +
       "broadcast — deliberately NOT an ntile window, whose global " +

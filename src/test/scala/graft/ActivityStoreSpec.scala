@@ -142,12 +142,32 @@ class ActivityStoreSpec extends AnyFunSuite {
     assert(jobs == 18, s"maintainFromCdc ran $jobs jobs")
   }
 
-  test("job pin: a served activeUsers collect runs 12 Spark jobs") {
+  test("job pin: a served activeUsers collect runs 1 Spark job") {
     val dir = freshDir()
     pinned(dir)
     val (rows, jobs) = JobCount(spark)(
       ActivityStore.activeUsers(spark, dir).collect())
     assert(rows.nonEmpty)
-    assert(jobs == 12, s"activeUsers ran $jobs jobs")
+    // the log reads as one partition: the net-sum, both aggregates and
+    // the orderBy plan no exchange
+    assert(jobs == 1, s"activeUsers ran $jobs jobs")
+  }
+
+  test("a store planned above the one-partition threshold keeps its exchange plan, same answers") {
+    val dir = freshDir()
+    pinned(dir)
+    ActivityStore.ingestBatch(spark, dir, change(
+      (3L, "insert", null, ts("2024-03-04T10:00"), null, 1L),
+      (4L, "insert", null, ts("2024-03-12T10:00"), null, 3L)), 1L)
+    def served(): (Seq[String], String) = {
+      val df = ActivityStore.activeUsers(spark, dir)
+      (df.collect().map(_.toString).toSeq,
+        df.queryExecution.executedPlan.toString)
+    }
+    val (small, smallPlan) = served()
+    val (large, largePlan) = AboveThreshold(spark)(served())
+    assert(!smallPlan.contains("Exchange"), smallPlan)
+    assert(largePlan.contains("Exchange hashpartitioning"), largePlan)
+    assert(large == small && small.size == 4, small)
   }
 }

@@ -523,7 +523,7 @@ class GraphEdgeStoreSpec extends AnyFunSuite {
     assert(r.getDouble(3) == 1.3333 && r.getDouble(4) == 1.0)
   }
 
-  test("job pin: a served basketPairs collect runs 2 Spark jobs") {
+  test("job pin: a served basketPairs collect runs 1 Spark job") {
     val dir = freshDir()
     GraphEdgeStore.build(spark, dir,
       li((1L, 10L), (1L, 20L), (1L, 30L), (2L, 10L), (2L, 20L)))
@@ -532,7 +532,7 @@ class GraphEdgeStoreSpec extends AnyFunSuite {
     val (rows, jobs) = JobCount(spark)(
       GraphEdgeStore.basketPairs(spark, dir).collect())
     assert(rows.nonEmpty)
-    // one exchange for the version-log sum, then the top-k result
-    assert(jobs == 2, s"basketPairs ran $jobs jobs")
+    // the log reads as one partition: the sum and the top-k in one job
+    assert(jobs == 1, s"basketPairs ran $jobs jobs")
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import graft.catalog.{Ddl, Profile}
 import graft.ingest.Ingest
-import org.scalacheck.{Gen, Properties, Test}
+import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.{forAll, propBoolean}
 
 /** Property-based invariants (SURVEY.md §5.3). Spark-touching properties
@@ -672,6 +672,8 @@ object PropertySpec extends Properties("graft") {
     // batches; a fold at a random point; 1 vs 4 buckets. The measures
     // are (g, m) = (item count, value sum), so the gauge g is ≥ 0 and
     // g = 0 implies m = 0, the invariant every additive store keeps.
+    // Every live read runs both ways: as the one-partition read of a
+    // small log, and with the log planned above that threshold.
     sealed trait Op
     case class Ins(k: Long, x: Long) extends Op
     case class Del(k: Long) extends Op
@@ -699,10 +701,17 @@ object PropertySpec extends Properties("graft") {
       }.toSet
       def version: Option[Long] =
         SnapshotStore.currentManifest(spark, dir).map(_.version)
+      def liveRead(): Set[(Long, Long, Long)] =
+        cells.live(spark, dir).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      var bothWaysAgree = true
       def live: Set[(Long, Long, Long)] =
         if (version.isEmpty) Set.empty
-        else cells.live(spark, dir).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+        else {
+          val one = liveRead()
+          bothWaysAgree &&= AboveThreshold(spark)(liveRead()) == one
+          one
+        }
       def drain(): Unit =
         SignedCells.drain(spark, cdc, ckpt, Seq(cells -> dir), None) {
           (b, v) => cells.ingest(spark, dir, b, v, buckets)
@@ -738,7 +747,47 @@ object PropertySpec extends Properties("graft") {
       // floored, the rest re-merge identical rows
       new java.io.File(s"$ckpt/_version_watermark").delete()
       drain()
-      ok && live == model
+      ok && live == model && bothWaysAgree
     }
+  }
+
+  property("activeUsersFrom == driver-side DAU/WAU model") = {
+    // distinct (day, user) activity over small day and user ranges;
+    // the degenerate inputs run on every pass: the empty frame, a single
+    // row, one user, and gaps longer than the 7-day window
+    val day0 = java.time.LocalDate.of(2024, 2, 25)
+    def check(raw: List[(Int, Long)]): Prop = {
+      import spark.implicits._
+      val act = raw.distinct
+      val days = act.map(_._1).distinct.sorted
+      val model = days.map { d =>
+        val dau = act.count(_._1 == d).toLong
+        val wau = act.filter(a => a._1 <= d && a._1 >= d - 6)
+          .map(_._2).distinct.size.toLong
+        (day0.plusDays(d.toLong).toString, dau, wau,
+          BigDecimal(dau.toDouble / wau)
+            .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      }
+      val out = queries.EventAnalytics.activeUsersFrom(
+        act.map { case (d, u) =>
+          (java.sql.Date.valueOf(day0.plusDays(d.toLong)), u)
+        }.toDF("d", "user_id"))
+      val got = out.collect().map(r =>
+        (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+      val schema = out.schema.map(f =>
+        (f.name, f.dataType.simpleString, f.nullable))
+      (got == model) :| s"rows $got != model $model" &&
+        (schema == Seq(("day", "string", true), ("dau", "bigint", false),
+          ("wau", "bigint", false), ("stickiness", "double", true))) :|
+          s"schema $schema"
+    }
+    def pairs(maxDay: Int, maxUser: Long): Gen[List[(Int, Long)]] =
+      Gen.listOf(Gen.zip(Gen.chooseNum(0, maxDay), Gen.chooseNum(1L, maxUser)))
+    Prop.all(
+      check(Nil),
+      check(List((3, 1L))),
+      check(List((0, 1L), (2, 1L), (9, 1L), (10, 1L), (30, 1L))),
+      check(List((0, 1L), (0, 2L), (8, 2L), (20, 3L), (26, 1L)))) &&
+      forAll(Gen.oneOf(pairs(40, 1L), pairs(12, 4L), pairs(60, 3L)))(check)
   }
 }

@@ -121,4 +121,18 @@ class RfmStoreSpec extends AnyFunSuite {
     assert(ltv() == Seq(
       ("2024-04", 0L, 2L, 2L, 25.0)))  // both found April now
   }
+
+  test("job pin: a served rfm collect runs 2 Spark jobs") {
+    // a job pin ([[JobCount]]), as in ActivityStoreSpec
+    val dir = freshDir()
+    RfmStore.ingestBatch(spark, dir, change(
+      (1L, "insert", null, 7L, null, day("2024-03-01"), null, 10.0),
+      (2L, "insert", null, 7L, null, day("2024-03-02"), null, 20.0),
+      (3L, "insert", null, 8L, null, day("2024-03-01"), null, 5.0)), 0L)
+    val (rows, jobs) = JobCount(spark)(RfmStore.rfm(spark, dir).collect())
+    assert(rows.nonEmpty)
+    // the log reads as one partition, so nothing shuffles: the
+    // broadcast quartile row, then the result
+    assert(jobs == 2, s"rfm ran $jobs jobs")
+  }
 }
