@@ -155,10 +155,10 @@ object Commerce {
     // checkpoint it because its two consumers (the quartile aggregate
     // and the scoring pass) would otherwise each re-execute the
     // scan+shuffle subtree (Catalyst doesn't CTE-dedup DataFrame
-    // branches). The store-served path skips the checkpoint: a small
-    // store's log reads as one partition (SignedCells.readLog), so each
-    // consumer re-sums the artifact-sized log inside its own stage, and
-    // a checkpoint would add a job to a 2-job serve.
+    // branches). The store-served path skips the checkpoint: a store
+    // log of at most 256 KB reads as one partition (SignedCells.readLog),
+    // so each consumer re-sums the artifact-sized log inside its own
+    // stage, and a checkpoint would add a job to a 2-job serve.
     rfmFrom(Tables.orders(s, d).groupBy("o_custkey").agg(
       count(lit(1)).as("freq"),
       sum(round(col("o_totalprice") * 100, 0).cast("bigint")).as("cents"),

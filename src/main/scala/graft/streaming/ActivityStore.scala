@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * [[graft.queries.EventAnalytics.activeUsersFrom]] is the shared
   * seam, so store-served DAU/WAU equals the registered key EXACTLY
   * (gate-pinned). A log no larger than
-  * `spark.sql.adaptive.advisoryPartitionSizeInBytes` (64 MB) is read
+  * [[SignedCells.onePartitionMaxBytes]] (256 KB) is read
   * as one partition ([[SignedCells.readLog]]), so the net-sum and the
   * seam plan no exchange and a served DAU/WAU collect is ONE Spark
   * job; a larger log keeps the exchange-based plan.

@@ -48,7 +48,8 @@ import org.apache.spark.sql.functions._
   * ([[stepEvents]]), then the SAME [[graft.operators.Funnel]]
   * derivations the registered keys run — store-served funnel ==
   * the registered key EXACTLY (gate-pinned), the log never read. A
-  * small log reads as one partition ([[SignedCells.readLog]]).
+  * log no larger than [[SignedCells.onePartitionMaxBytes]] (256 KB)
+  * reads as one partition ([[SignedCells.readLog]]).
   */
 object FunnelStore {
 

@@ -332,8 +332,8 @@ object GraphEdgeStore {
     * log, fully-deleted edges dropped. One edge-sized scan + hash agg —
     * the frame every `q_graph_*` plan consumes in place of its live
     * lineitem derivation when the store is maintained. A log no larger
-    * than `spark.sql.adaptive.advisoryPartitionSizeInBytes` (64 MB) is
-    * read as one partition ([[SignedCells.readLog]]), so the sum plans
+    * than [[SignedCells.onePartitionMaxBytes]] (256 KB) is read as one
+    * partition ([[SignedCells.readLog]]), so the sum plans
     * no exchange; a larger log keeps the exchange-based plan. */
   def edges(spark: SparkSession, edgeDir: String): DataFrame =
     EdgeCells.live(spark, edgeDir)

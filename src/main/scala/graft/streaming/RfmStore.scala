@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * frame, then the SHARED [[graft.queries.Commerce.rfmFrom]] scoring
   * seam — store-served RFM == the registered key EXACTLY (gate-pinned).
   * The order log is never read. A log no larger than
-  * `spark.sql.adaptive.advisoryPartitionSizeInBytes` (64 MB) is read
+  * [[SignedCells.onePartitionMaxBytes]] (256 KB) is read
   * as one partition ([[SignedCells.readLog]]), so the net-sum and the
   * scoring plan no exchange: a served RFM collect is TWO Spark jobs
   * (the broadcast quartile row, then the result); a larger log keeps

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, sum}
-import org.apache.spark.sql.internal.SQLConf
 
 /** One ADDITIVE maintained artifact: signed cells keyed by `keys` and
   * the CDC version `ver`, carrying the additive `measures` — a Z-set
@@ -20,9 +19,10 @@ import org.apache.spark.sql.internal.SQLConf
   *    merge. An all-zero batch commits no version (merge touches no
   *    bucket).
   *  - LIVE READ ([[live]]): sum the measures per key over the whole
-  *    version log and keep the keys whose gauge is > 0. A small log is
-  *    read as one partition ([[SignedCells.readLog]]), so a serve over
-  *    it plans no exchange.
+  *    version log and keep the keys whose gauge is > 0. A log planned at
+  *    most [[SignedCells.onePartitionMaxBytes]] (256 KB) is read as one
+  *    partition ([[SignedCells.readLog]]), so a serve over it plans no
+  *    exchange.
   *  - FOLD ([[fold]]): compact the log into a fresh [[SignedCells.BaseVer]]
   *    base ([[VersionDrain.foldStoreMulti]]: stage-then-swap, and the
   *    `_folded_through` replay floor).
@@ -99,23 +99,33 @@ private[graft] object SignedCells {
     require(batchId >= 0L,
       s"batchId must be >= 0 (got $batchId): $BaseVer is reserved for the base build")
 
+  /** The largest planned log size [[readLog]] reads as one partition:
+    * 256 KB, measured by [[graft.tools.ServeSizeProbe]] on 4 cores
+    * (one-partition time / exchange-plan time, medians of 3–5 runs).
+    * `ActivityStore.activeUsers` gains below it (0.60 at 0.1 MB
+    * planned, 0.80 at 0.3 MB), is even at 0.5 MB (1.02) and loses from
+    * 1 MB (1.28; 2.28 at 8 MB). `GraphEdgeStore.basketPairs`, PageRank
+    * over the store edges and `TextIndexStore.search` are within run
+    * noise up to about 1 MB (0.81–1.29) and lose beyond (basketPairs
+    * 1.46 at 8 MB, 2.39 at 129 MB; PageRank 1.45 at 8 MB). The
+    * maintained stores of the `store_cdc` benchmark weigh 24–51 KB.
+    * A var only so tests and the probe can read a log both ways. */
+  @volatile private[graft] var onePartitionMaxBytes: Long = 256L << 10
+
   /** The version log at `dir` as a serve reads it. A log whose planned
-    * size is at most `spark.sql.adaptive.advisoryPartitionSizeInBytes`
-    * (64 MB by default: the size AQE itself targets for one partition)
-    * is read as ONE partition. `SinglePartition` satisfies every
-    * clustered, ordered and all-tuples distribution, so the log-sum and
-    * the aggregates, joins and `orderBy` a serve plans over it need no
-    * exchange, and the serve runs as one stage instead of one AQE stage
-    * submission per exchange (an exchange, a broadcast or a range-sort
-    * sample each cost a Spark job, and at store sizes a job costs more
-    * than the rows it moves). The planned size comes from the file
-    * listing the read already did, so deciding runs no Spark job. A
-    * larger log keeps the exchange-based plan. */
+    * size is at most [[onePartitionMaxBytes]] is read as ONE partition.
+    * `SinglePartition` satisfies every clustered, ordered and all-tuples
+    * distribution, so the log-sum and the aggregates, joins and
+    * `orderBy` a serve plans over it need no exchange, and the serve
+    * runs as one stage instead of one AQE stage submission per exchange
+    * (an exchange, a broadcast or a range-sort sample each cost a Spark
+    * job, and at store sizes a job costs more than the rows it moves).
+    * The planned size comes from the file listing the read already did,
+    * so deciding runs no Spark job. A larger log keeps the
+    * exchange-based plan. */
   def readLog(spark: SparkSession, dir: String): DataFrame = {
     val log = SnapshotStore.read(spark, dir)
-    val onePartition =
-      spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    if (log.queryExecution.optimizedPlan.stats.sizeInBytes <= onePartition)
+    if (log.queryExecution.optimizedPlan.stats.sizeInBytes <= onePartitionMaxBytes)
       log.coalesce(1)
     else log
   }

@@ -1,22 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.streaming.SignedCells
 
 /** Runs a block with every store log planned above the one-partition
   * read threshold of [[streaming.SignedCells.readLog]]: the block sees
-  * `spark.sql.adaptive.advisoryPartitionSizeInBytes` lowered to one
-  * byte, and the session's own setting is restored after it. */
+  * [[streaming.SignedCells.onePartitionMaxBytes]] lowered below any
+  * planned size, and the threshold is restored after it. */
 object AboveThreshold {
 
-  private val Key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-
-  def apply[T](spark: SparkSession)(body: => T): T = {
-    val saved = spark.conf.getOption(Key)
-    spark.conf.set(Key, "1b")
+  def apply[T](body: => T): T = {
+    val saved = SignedCells.onePartitionMaxBytes
+    SignedCells.onePartitionMaxBytes = -1L
     try body
-    finally saved match {
-      case Some(v) => spark.conf.set(Key, v)
-      case None => spark.conf.unset(Key)
-    }
+    finally SignedCells.onePartitionMaxBytes = saved
   }
 }

@@ -165,7 +165,7 @@ class ActivityStoreSpec extends AnyFunSuite {
         df.queryExecution.executedPlan.toString)
     }
     val (small, smallPlan) = served()
-    val (large, largePlan) = AboveThreshold(spark)(served())
+    val (large, largePlan) = AboveThreshold(served())
     assert(!smallPlan.contains("Exchange"), smallPlan)
     assert(largePlan.contains("Exchange hashpartitioning"), largePlan)
     assert(large == small && small.size == 4, small)

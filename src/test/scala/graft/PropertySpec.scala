@@ -709,7 +709,7 @@ object PropertySpec extends Properties("graft") {
         if (version.isEmpty) Set.empty
         else {
           val one = liveRead()
-          bothWaysAgree &&= AboveThreshold(spark)(liveRead()) == one
+          bothWaysAgree &&= AboveThreshold(liveRead()) == one
           one
         }
       def drain(): Unit =
