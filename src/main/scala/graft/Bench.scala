@@ -41,6 +41,10 @@ object Bench {
       if (writeKeyPrefixes.exists(name.startsWith)) math.max(reps, 3) else reps
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
+    // Janino compiles so far in this JVM: Spark's compile-time histogram
+    // takes one sample per generated class compiled, none per cache hit
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     // The registry runs alphabetically, so the gate family is a
     // contiguous block and its END is knowable: once the last q_gate_*
     // key has run, the GateMemo's checkpointed fixtures are dead weight
@@ -75,7 +79,9 @@ object Bench {
       // Expensive keys keep the configured rep count — re-running a
       // 6 s key 5x would cost more than the noise it removes.
       val base = repsFor(name)
+      val compiled0 = compiles()
       var runs = Vector(runOnce())
+      val firstCompiles = compiles() - compiled0
       while (runs.size < base) runs :+= runOnce()
       while (runs.map(_._1).min < 1.0 && runs.size < math.max(base, 5))
         runs :+= runOnce()
@@ -128,16 +134,17 @@ object Bench {
       // store-build regression at all (round-17 verdict item #4). For
       // plain keys cold also records the cache-cold cost the min
       // deliberately excludes.
-      (name, runs.map(_._1).min, runs.forall(_._2), runs.size, runs.head._1)
+      (name, runs.map(_._1).min, runs.forall(_._2), runs.size, runs.head._1,
+        firstCompiles)
     }
     def r3(v: Double): Double = math.round(v * 1000).toDouble / 1000
     // minimal JSON string escaping for the user-controlled sfDir (a
     // quote or backslash in the env var must not emit unparseable JSON)
     def js(s: String): String =
       "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    def jmap(rs: Seq[(String, Double, Boolean, Int, Double)]): String =
-      rs.map { case (k, v, _, _, _) => js(k) + ":" + r3(v) }.mkString("{", ",", "}")
-    val errors = results.collect { case (n, _, false, _, _) => "\"" + n + "\"" }
+    def jmap(rs: Seq[(String, Double, Boolean, Int, Double, Long)]): String =
+      rs.map { case (k, v, _, _, _, _) => js(k) + ":" + r3(v) }.mkString("{", ",", "}")
+    val errors = results.collect { case (n, _, false, _, _, _) => "\"" + n + "\"" }
     val total = r3(results.map(_._2).sum)
     // Full per-query detail goes to a file; stdout gets ONE COMPACT line
     // (total + the 10 slowest + failures) so it survives a bounded
@@ -152,18 +159,23 @@ object Bench {
     // suspicious number was (or wasn't) captured under the min-of-5
     // noise policy rather than as a single hot-host sample
     val repsJson = results
-      .map { case (k, _, _, n, _) => js(k) + ":" + n }.mkString("{", ",", "}")
+      .map { case (k, _, _, n, _, _) => js(k) + ":" + n }.mkString("{", ",", "}")
     // first-rep (cold) times next to the min: the min is the
     // reproducible PLAN cost, the cold rep carries the build/IO cost a
     // memoizing gate pays once — both are needed to read a gate-family
     // capture round-over-round (round-17 verdict item #4; BASELINE.md
     // explains the two columns)
     val coldJson = results
-      .map { case (k, _, _, _, c) => js(k) + ":" + r3(c) }.mkString("{", ",", "}")
+      .map { case (k, _, _, _, c, _) => js(k) + ":" + r3(c) }.mkString("{", ",", "}")
+    // codegen compiles in each key's first rep, and in the whole run
+    // (warm-up and every rep included)
+    val compilesJson = results
+      .map { case (k, _, _, _, _, n) => js(k) + ":" + n }.mkString("{", ",", "}")
     Files.writeString(Paths.get(detailFile),
       s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},""" +
       s""""errors":${errors.mkString("[", ",", "]")},"queries":${jmap(results)},""" +
-      s""""reps":$repsJson,"cold":$coldJson,"sf":${js(sfDir)}}""" + "\n")
+      s""""reps":$repsJson,"cold":$coldJson,"compiles":$compilesJson,""" +
+      s""""compiles_total":${compiles()},"sf":${js(sfDir)}}""" + "\n")
     println(
       s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},""" +
       s""""errors":${errors.mkString("[", ",", "]")},"queries":${jmap(slowest)},""" +

@@ -66,12 +66,32 @@ object Tables {
   *     timestamps bit-for-bit in the t2 hash compare
   *   - AQE on (runtime coalesce / skew-join / broadcast switch)
   *   - shuffle partitions sized to the local core count, not 200
+  *   - a codegen class cache of [[CodegenCacheEntries]] entries, not
+  *     Spark's 100, so each generated class is compiled once per JVM
   */
 object GraftSession {
+  /** Entries in Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). Spark keys the
+    * cache by (context class loader, source), and local-mode tasks run
+    * under the executor's loader, so a class planned on the driver is
+    * cached twice. Compiles in one run with the cache never evicting
+    * (4 cores): perfbench `store_cdc` 357, `etl_journey` 378, a full
+    * `graft.Verify` pass at sf0.01 4,995. So both perfbench workloads
+    * fit with room to spare, and a Verify pass, which at 4096 compiles
+    * 5,036 classes, recompiles 41 evicted ones (0.8%). With 100 entries
+    * a `store_cdc` cycle's load phase compiled 297 classes (3.1 s of
+    * Janino time summed over threads) against 152 (1.75 s) here, and the
+    * cycle's first serve pass recompiled the 39 classes the warm-up
+    * serve had compiled. A static conf: `CodeGenerator` reads it once,
+    * from the active session, when it first compiles, so it is set here
+    * and cannot be changed on a running session. */
+  val CodegenCacheEntries = 4096
+
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =
     SparkSession.builder()
       .withExtensions(new GraftExtensions)
       .master(master)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")

@@ -422,13 +422,6 @@ object Streams {
     if (!retainHistory) SnapshotStore.vacuum(spark, targetDir, keepLast = 2)
   }
 
-  /** The highest version already committed to the CDC log. The log is
-    * PARTITIONED by `__version`, so this is a directory LISTING — no
-    * data read, constant cost at any log size. A version's partition
-    * dir appears only when its append job commits, so the listing is
-    * exactly the committed-version record the exactly-once diff base
-    * needs (a side-marker written after the append could lag it and
-    * cause re-logging; the partition dir cannot). */
   /** The committed version partitions of a CDC log, sorted — THE single
     * listing/parse used by the diff base, the vacuum, and the reader
     * (one place to change if the partition naming ever does; a missing
@@ -443,6 +436,13 @@ object Streams {
       .sorted.toSeq
   }
 
+  /** The highest version already committed to the CDC log. The log is
+    * PARTITIONED by `__version`, so this is a directory LISTING — no
+    * data read, constant cost at any log size. A version's partition
+    * dir appears only when its append job commits, so the listing is
+    * exactly the committed-version record the exactly-once diff base
+    * needs (a side-marker written after the append could lag it and
+    * cause re-logging; the partition dir cannot). */
   private[graft] def lastLoggedVersion(spark: SparkSession,
       cdcDir: String): Option[Long] =
     listCdcVersions(spark, cdcDir).lastOption

@@ -153,6 +153,21 @@ class ActivityStoreSpec extends AnyFunSuite {
     assert(jobs == 1, s"activeUsers ran $jobs jobs")
   }
 
+  test("compile pin: a serve after 150 other plans compiles no class") {
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftSession.CodegenCacheEntries.toString)
+    val dir = freshDir()
+    pinned(dir)
+    val first = ActivityStore.activeUsers(spark, dir).collect().toSeq
+    // 150 distinct plans (the literal is inlined in each generated
+    // class), more than Spark's default 100-entry cache holds
+    for (i <- 1 to 150) spark.range(3).select(col("id") * i).collect()
+    val (again, compiles) = CompileCount(
+      ActivityStore.activeUsers(spark, dir).collect().toSeq)
+    assert(again == first && first.nonEmpty)
+    assert(compiles == 0, s"the second serve compiled $compiles classes")
+  }
+
   test("a store planned above the one-partition threshold keeps its exchange plan, same answers") {
     val dir = freshDir()
     pinned(dir)
